@@ -54,17 +54,22 @@ class Pipeline(spark: SparkSession, source: FredSource, lakeRoot: String,
     sys.error("unreachable")
   }
 
-  /** Extract one indicator over [start, end]: month-ranged API calls
-    * (C8), bronze shaping (B1-B3, C1-C2), partitioned JSON-lines write
-    * (H1). One write per month mirrors the reference's per-month
-    * S3 object (`extract_fred_data.py:238-290`). */
+  /** Extract one indicator over [start, end] in one Spark job: one
+    * month-ranged API call per month (C8) on the driver, bronze shaping
+    * (B1-B3, C1-C2), then ONE partitioned JSON-lines write of the whole
+    * window (H1). The frame is kept in one partition, so each month leaf
+    * holds exactly one file, like the reference's per-month S3 object
+    * (`extract_fred_data.py:238-290`), and dynamic overwrite replaces
+    * exactly the window's months. Every month is fetched before
+    * anything is written: a call writes all of its months or none, and
+    * all of them carry the same `ingested_at` stamp. */
   def extract(seriesId: String, start: LocalDate, end: LocalDate): Unit =
     withRetry("extract") {
-      FredSource.monthRanges(start, end).foreach { case (first, last) =>
-        val obs = FredSource.observations(
-          spark, source.fetchMonth(seriesId, first, last))
-        LakeIO.writeBronze(Derive.toBronze(obs, seriesId), bronzeRoot)
+      val responses = FredSource.monthRanges(start, end).map { case (first, last) =>
+        source.fetchMonth(seriesId, first, last)
       }
+      val obs = FredSource.observations(spark, responses)
+      LakeIO.writeBronze(Derive.toBronze(obs, seriesId).coalesce(1), bronzeRoot)
     }
 
   /** Transform bronze months of one indicator to silver monthly grain:

@@ -1,13 +1,18 @@
 package graft.fred.io
 
 import java.time.LocalDate
-import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** G1 — the FRED `series/observations` REST source.
   *
   * An API that returns at most thousands of rows per call must not be a
-  * distributed scan: fetch on the driver, parallelize the result
-  * (`extract_fred_data.py:94-139`). The trait lets tests inject fixture
+  * distributed scan: fetch and parse on the driver, hand Spark a local
+  * relation (`extract_fred_data.py:94-139`). The trait lets tests inject fixture
   * JSON; `HttpFredSource` is the real client with the reference's retry
   * posture (3 retries, backoff, honor 429; `extract_fred_data.py:74-77,
   * 105-110`).
@@ -33,20 +38,73 @@ object FredSource {
       .toSeq
   }
 
-  /** Parse one raw FRED response into a DataFrame of the observation
-    * array. Shape-validated like `extract_fred_data.py:116-129`: an
-    * `observations` list must be present, each element carrying
-    * `date` + `value`. */
-  def observations(spark: SparkSession, responseJson: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val raw = spark.read.json(Seq(responseJson).toDS())
-    require(raw.columns.contains("observations"),
-      "FRED response missing 'observations'")
-    val obs = raw.select(explode(col("observations")).as("o")).select("o.*")
-    require(Seq("date", "value").forall(obs.columns.contains),
-      "FRED observation missing date/value")
-    obs
+  /** Parse raw FRED responses into one `(date, value)` string frame.
+    *
+    * Parsing happens on the driver with Jackson's streaming parser and
+    * the rows become a local relation, so building the frame runs no
+    * Spark job (no schema-inference read). Each response is validated
+    * like `extract_fred_data.py:116-136`: an `observations` array must
+    * be present and non-empty, and every element must carry `date` and
+    * `value`. A JSON `null` stays null (the silver cast drops it); a
+    * number or boolean keeps its JSON text. Other response fields
+    * (`realtime_*`, `units`, …) are not kept. */
+  def observations(spark: SparkSession, responses: Seq[String]): DataFrame = {
+    val rows = responses.flatMap(parseObservations).map { case (d, v) => Row(d, v) }
+    spark.createDataFrame(rows.asJava, ObservationSchema)
+  }
+
+  /** One raw FRED response as a `(date, value)` frame; see the `Seq`
+    * overload. */
+  def observations(spark: SparkSession, responseJson: String): DataFrame =
+    observations(spark, Seq(responseJson))
+
+  private val ObservationSchema = StructType(Seq(
+    StructField("date", StringType), StructField("value", StringType)))
+  private val Json = new JsonFactory()
+
+  /** The `(date, value)` pairs of one response, in response order. */
+  private def parseObservations(responseJson: String): Seq[(String, String)] = {
+    val p = Json.createParser(responseJson)
+    try {
+      require(p.nextToken() == JsonToken.START_OBJECT,
+        "FRED response is not a JSON object")
+      var obs: Option[Seq[(String, String)]] = None
+      while (p.nextToken() == JsonToken.FIELD_NAME) {
+        val field = p.currentName()
+        p.nextToken()
+        if (field == "observations") {
+          require(p.currentToken() == JsonToken.START_ARRAY,
+            "FRED response 'observations' is not an array")
+          obs = Some(readArray(p))
+        } else p.skipChildren()
+      }
+      require(obs.isDefined, "FRED response missing 'observations'")
+      require(obs.get.nonEmpty, "FRED response 'observations' is empty")
+      obs.get
+    } finally p.close()
+  }
+
+  private def readArray(p: JsonParser): Seq[(String, String)] = {
+    val out = Seq.newBuilder[(String, String)]
+    var i = 0
+    while (p.nextToken() != JsonToken.END_ARRAY) {
+      require(p.currentToken() == JsonToken.START_OBJECT,
+        s"FRED observation $i is not a JSON object")
+      val fields = scala.collection.mutable.Map.empty[String, String]
+      while (p.nextToken() == JsonToken.FIELD_NAME) {
+        val field = p.currentName()
+        val t = p.nextToken()
+        if (field == "date" || field == "value") {
+          require(t.isScalarValue, s"FRED observation $i '$field' is not a scalar")
+          fields(field) = if (t == JsonToken.VALUE_NULL) null else p.getText
+        } else p.skipChildren()
+      }
+      Seq("date", "value").foreach(f =>
+        require(fields.contains(f), s"FRED observation $i missing '$f'"))
+      out += (fields("date") -> fields("value"))
+      i += 1
+    }
+    out.result()
   }
 
   /** Fixture-backed source for tests. */

@@ -20,8 +20,10 @@ import graft.fred.Schemas
 object Derive {
 
   /** B2+B3+C1+C2+B1: raw API rows → bronze rows. The job stamp is
-    * plan-constant (one timestamp per job), matching the reference's
-    * single `pd.Timestamp.now()` per run (`extract_fred_data.py:168`).
+    * plan-constant: one timestamp per query, and `Pipeline.extract`
+    * writes a whole window in one query, so every month of one extract
+    * call (one DAG run) carries the same stamp — the reference's single
+    * `pd.Timestamp.now()` per run (`extract_fred_data.py:168`).
     */
   def toBronze(raw: DataFrame, seriesId: String): DataFrame = {
     val d = to_date(col("date"), "yyyy-MM-dd")

@@ -154,6 +154,52 @@ class FredOpsSpec extends SparkSpec {
 
   // -------------------------------------------------------- FredSource
 
+  private def rejects(responseJson: String, message: String): Unit = {
+    val e = intercept[IllegalArgumentException] {
+      graft.fred.io.FredSource.observations(spark, responseJson)
+    }
+    assert(e.getMessage.contains(message), e.getMessage)
+  }
+
+  test("observations: a response without 'observations' is rejected") {
+    rejects("""{"units":"lin","count":0}""", "missing 'observations'")
+  }
+
+  test("observations: an 'observations' value that is not an array is rejected") {
+    rejects("""{"observations":{"date":"2024-01-02","value":"3.95"}}""",
+      "'observations' is not an array")
+  }
+
+  test("observations: an empty 'observations' array is rejected") {
+    rejects("""{"observations":[]}""", "'observations' is empty")
+  }
+
+  test("observations: an element without 'date' is rejected") {
+    rejects("""{"observations":[{"date":"2024-01-02","value":"3.95"},{"value":"4.0"}]}""",
+      "observation 1 missing 'date'")
+  }
+
+  test("observations: an element without 'value' is rejected") {
+    rejects("""{"observations":[{"date":"2024-01-02"},{"date":"2024-01-03","value":"4.0"}]}""",
+      "observation 0 missing 'value'")
+  }
+
+  test("observations: a JSON null value stays null in bronze and drops at silver") {
+    val obs = graft.fred.io.FredSource.observations(spark,
+      """{"observations":[{"date":"2024-01-02","value":null},{"date":"2024-01-03","value":"4.0"}]}""")
+    val bronze = Derive.toBronze(obs, "DGS10")
+    assert(bronze.select("observation_date", "value").as[(String, String)].collect().toSeq ==
+      Seq(("2024-01-02", null), ("2024-01-03", "4.0")))
+    assert(Clean.cleanValues(bronze).select("observation_date").as[String].collect().toSeq ==
+      Seq("2024-01-03"))
+  }
+
+  test("observations: a numeric value keeps its JSON text") {
+    val obs = graft.fred.io.FredSource.observations(spark,
+      """{"observations":[{"date":"2024-01-02","value":3.90},{"date":"2024-01-03","value":4}]}""")
+    assert(obs.select("value").as[String].collect().toSeq == Seq("3.90", "4"))
+  }
+
   test("C8 monthRanges: clamps partial first/last months") {
     import java.time.LocalDate
     val ranges = graft.fred.io.FredSource.monthRanges(

@@ -9,8 +9,8 @@ import graft.fred.io.{JdbcRead, UpsertSink}
   * JDBC read (single-cursor and striped-parallel) and the sink's
   * foreachPartition/batch/transaction machinery run a real round trip
   * in-JVM — no network, no external server. Derby lacks Postgres
-  * `ON CONFLICT`, so the sink test uses the insert builder; the upsert
-  * DIALECT stays pinned by the `upsertSql` string test below.
+  * `ON CONFLICT`, so the sink tests use the insert and `MERGE` builders;
+  * the upsert DIALECT stays pinned by the `upsertSql` string test below.
   */
 class JdbcSpec extends SparkSpec {
   import spark.implicits._
@@ -43,6 +43,38 @@ class JdbcSpec extends SparkSpec {
       assert(back.toSeq == Seq(
         ("CPI", 2024, 1, 3.1), ("DGS10", 2024, 1, 4.0), ("DGS10", 2024, 2, 4.2)))
     }
+  }
+
+  test("UpsertSink.write with mergeSql: a re-delivered revised row updates in place") {
+    withTable("gold_merge",
+      "CREATE TABLE gold_merge (series_id VARCHAR(16), observation_year INT, " +
+        "observation_month INT, value_d DOUBLE, " +
+        "PRIMARY KEY (series_id, observation_year, observation_month))") {
+      val keys = Seq("series_id", "observation_year", "observation_month")
+      // one partition, so one connection merges: see mergeSql on Derby
+      def deliver(rows: (String, Int, Int, Double)*): Unit =
+        UpsertSink.write(
+          rows.toDF("series_id", "observation_year", "observation_month", "value_d").coalesce(1),
+          url, "gold_merge", keys = keys, sqlBuilder = UpsertSink.mergeSql)
+      deliver(("DGS10", 2024, 1, 4.0), ("DGS10", 2024, 2, 4.2))
+      // a revised January and a new March; February is not re-delivered
+      deliver(("DGS10", 2024, 1, 4.01), ("DGS10", 2024, 3, 4.4))
+      val back = JdbcRead.read(spark, url, "gold_merge", driver)
+        .as[(String, Int, Int, Double)].collect().sortBy(_._3)
+      assert(back.toSeq == Seq(
+        ("DGS10", 2024, 1, 4.01), ("DGS10", 2024, 2, 4.2), ("DGS10", 2024, 3, 4.4)))
+    }
+  }
+
+  test("mergeSql binds the keys in ON, the non-keys in SET, then every column") {
+    val cols = Seq("series_id", "observation_month", "value_d")
+    val keys = Seq("series_id", "observation_month")
+    assert(UpsertSink.mergeSql("g", cols, keys) == "MERGE INTO g USING SYSIBM.SYSDUMMY1 " +
+      "ON g.series_id = ? AND g.observation_month = ? " +
+      "WHEN MATCHED THEN UPDATE SET value_d = ? " +
+      "WHEN NOT MATCHED THEN INSERT (series_id, observation_month, value_d) VALUES (?, ?, ?)")
+    assert(UpsertSink.mergeSql.binds(cols, keys) ==
+      Seq("series_id", "observation_month", "value_d", "series_id", "observation_month", "value_d"))
   }
 
   test("readPartitioned stripes the scan across numPartitions JDBC cursors") {

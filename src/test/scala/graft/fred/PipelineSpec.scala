@@ -4,7 +4,7 @@ import java.time.LocalDate
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.fred.io.{DdlOps, FredSource}
+import graft.fred.io.{DdlOps, FredSource, LakeIO}
 
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -78,6 +78,91 @@ class PipelineSpec extends SparkSpec {
       pipe2.extract("DGS10",
         LocalDate.parse("2024-01-01"), LocalDate.parse("2024-01-31"))
     }
+  }
+
+  // ------------------------------------------- extract: one job per call
+
+  private val window = Seq(1, 2, 3).map(m => ("DGS10", 2024, m) -> (
+    s"""{"observations":[{"realtime_start":"2024-06-01","date":"2024-0$m-02","value":"4.$m"},""" +
+      s"""{"date":"2024-0$m-03","value":"."},{"date":"2024-0$m-04","value":"4.${m}5"}]}""")).toMap
+
+  /** Data files of every bronze month leaf: leaf → file names. */
+  private def bronzeLeaves(root: String): Map[String, Seq[String]] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get(s"$root/raw_data")).iterator().asScala
+      .filter(java.nio.file.Files.isRegularFile(_))
+      .filterNot { f => val n = f.getFileName.toString; n.startsWith(".") || n.startsWith("_") }
+      .toSeq.groupBy(_.getParent.toString.stripPrefix(s"$root/raw_data/"))
+      .map { case (leaf, fs) => leaf -> fs.map(_.getFileName.toString).sorted }
+  }
+
+  /** (date, value) lines of one leaf file, in file order; and its stamps. */
+  private def leafRows(root: String, leaf: String, file: String): (Seq[(String, String)], Set[String]) = {
+    val lines = spark.read.schema("observation_date STRING, value STRING, ingested_at STRING")
+      .json(s"$root/raw_data/$leaf/$file").collect()
+    (lines.map(r => (r.getString(0), r.getString(1))).toSeq, lines.map(_.getString(2)).toSet)
+  }
+
+  test("extract: a 3-month window writes one file per month leaf, idempotently") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-extract").toString
+    val pipe = new Pipeline(spark, new FredSource.Fixture(window), tmp)
+    pipe.extract("DGS10", LocalDate.parse("2024-01-01"), LocalDate.parse("2024-03-31"))
+    val leaves = bronzeLeaves(tmp)
+    val expectedLeaves = (1 to 3).map(m => s"indicator=DGS10/observation_year=2024/observation_month=$m")
+    assert(leaves.keySet == expectedLeaves.toSet, s"got ${leaves.keySet}")
+    assert(leaves.values.forall(_.size == 1), s"one file per month leaf: $leaves")
+    val stamps = expectedLeaves.zip(1 to 3).map { case (leaf, m) =>
+      val (rows, stamp) = leafRows(tmp, leaf, leaves(leaf).head)
+      // the response's rows in response order, the raw value strings kept
+      assert(rows == Seq((s"2024-0$m-02", s"4.$m"), (s"2024-0$m-03", "."),
+        (s"2024-0$m-04", s"4.${m}5")), s"month $m: $rows")
+      stamp
+    }
+    assert(stamps.flatten.toSet.size == 1, s"one ingested_at stamp per call: $stamps")
+    // a re-run replaces exactly those leaves: new files, same rows
+    pipe.extract("DGS10", LocalDate.parse("2024-01-01"), LocalDate.parse("2024-03-31"))
+    val again = bronzeLeaves(tmp)
+    assert(again.keySet == leaves.keySet && again.values.forall(_.size == 1), s"got $again")
+    assert(again.forall { case (leaf, fs) => fs != leaves(leaf) }, "every leaf rewritten")
+    assert(LakeIO.readBronze(spark, s"$tmp/raw_data").count() == 9)
+  }
+
+  test("extract: a source failing on month 2 leaves no bronze leaf of the window") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-extract-fail").toString
+    val failing = new FredSource {
+      def fetchMonth(seriesId: String, start: LocalDate, end: LocalDate): String =
+        if (start.getMonthValue == 2) throw new RuntimeException("month 2 down")
+        else window((seriesId, start.getYear, start.getMonthValue))
+    }
+    val pipe = new Pipeline(spark, failing, tmp, retries = 1, retryDelayMs = 0L)
+    val e = intercept[RuntimeException] {
+      pipe.extract("DGS10", LocalDate.parse("2024-01-01"), LocalDate.parse("2024-03-31"))
+    }
+    assert(e.getMessage == "month 2 down")
+    assert(!new java.io.File(s"$tmp/raw_data").exists(), "month 1 must not have been written")
+  }
+
+  test("extract: a whole window costs exactly one Spark job") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-extract-jobs").toString
+    val pipe = new Pipeline(spark, new FredSource.Fixture(window), tmp)
+    val sc = spark.sparkContext
+    val group = s"extract-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "extract job count")
+      try pipe.extract("DGS10", LocalDate.parse("2024-01-01"), LocalDate.parse("2024-03-31"))
+      finally sc.clearJobGroup()
+      // the listener bus is asynchronous: drain it before counting, so a
+      // late second job cannot go unseen
+      org.apache.spark.GraftListenerFlush.flush(sc)
+      assert(jobs.get == 1, s"extract ran ${jobs.get} Spark jobs")
+    } finally sc.removeSparkListener(l)
   }
 
   test("typed silver boundary: Dataset[SilverObservation] round-trips the lake") {
