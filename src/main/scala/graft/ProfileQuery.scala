@@ -23,6 +23,10 @@ object ProfileQuery {
       var shRead: Long = 0L, var shWrite: Long = 0L,
       var desc: String = "")
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
+    // stage id -> the first job whose start event lists it (AQE
+    // broadcast and subquery jobs overlap their parent)
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, J]()
+    val stageTasks = new java.util.concurrent.atomic.AtomicInteger()
     @volatile var recording = false
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
@@ -34,6 +38,7 @@ object ProfileQuery {
               .flatMap(p => Option(p.getProperty("spark.job.description")))
               .getOrElse("")
             j.stages = e.stageInfos.size
+            e.stageIds.foreach(stageJob.putIfAbsent(_, j))
             jobs.put(e.jobId, j)
           }
         override def onJobEnd(
@@ -43,20 +48,13 @@ object ProfileQuery {
         }
         override def onStageCompleted(
             s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          // bill the stage to whichever recorded job ran it (stage ids
-          // are unique; jobId lookup via the stage's job is not exposed
-          // here, so approximate: bill to the most recent open job)
           val m = s.stageInfo.taskMetrics
-          if (m != null && recording) {
-            import scala.jdk.CollectionConverters._
-            val open = jobs.values.asScala.filter(_.end < 0)
-            val tgt = if (open.nonEmpty) Some(open.maxBy(_.id))
-              else jobs.values.asScala.toSeq.sortBy(_.id).lastOption
-            tgt.foreach { j =>
-              j.tasks += s.stageInfo.numTasks
-              j.shRead += m.shuffleReadMetrics.totalBytesRead
-              j.shWrite += m.shuffleWriteMetrics.bytesWritten
-            }
+          val j = stageJob.get(s.stageInfo.stageId)
+          if (recording) stageTasks.addAndGet(s.stageInfo.numTasks)
+          if (m != null && j != null) {
+            j.tasks += s.stageInfo.numTasks
+            j.shRead += m.shuffleReadMetrics.totalBytesRead
+            j.shWrite += m.shuffleWriteMetrics.bytesWritten
           }
         }
       })
@@ -68,18 +66,22 @@ object ProfileQuery {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       (1 to runs).foreach { r =>
         jobs.clear()
+        stageJob.clear()
+        stageTasks.set(0)
         recording = true
         spark.sparkContext.setJobDescription(s"measure $name")
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val total = (System.nanoTime() - t0) / 1e9
+        org.apache.spark.GraftListenerFlush.flush(spark.sparkContext)
         recording = false
         spark.sparkContext.setJobDescription(null)
         import scala.jdk.CollectionConverters._
         val js = jobs.values.asScala.toSeq.sortBy(_.id)
         val sumJ = js.map(j => math.max(0L, j.end - j.start)).sum / 1e3
         println(f"== $name run $r: total $total%.2fs over ${js.size} jobs " +
-          f"(sum of job walls $sumJ%.2fs; gap ${total - sumJ}%.2fs driver-side)")
+          f"(sum of job walls $sumJ%.2fs; gap ${total - sumJ}%.2fs driver-side; " +
+          s"tasks billed ${js.map(_.tasks).sum} of ${stageTasks.get} in completed stages)")
         js.foreach { j =>
           val d = math.max(0L, j.end - j.start) / 1e3
           println(f"  job ${j.id}%4d  $d%7.3fs  stages=${j.stages}%2d " +

@@ -862,10 +862,8 @@ object Dedup {
     * ([[SuffixDedup.savedGramIndexBucketed]] semantics). */
   def savedDfIndexBucketed(spark: org.apache.spark.sql.SparkSession,
       root: String, buckets: Int = 16): DataFrame = {
-    // heal a crash between compactSavedDfIndex's renames: a root
-    // missing while .swap_old holds the state must restore, never
-    // read as a zero-count corpus
-    SuffixDedup.recoverSavedIndex(spark, root)
+    // a crashed compaction swap must heal, never read as a zero-count corpus
+    graft.Swap.heal(spark, root)
     SuffixDedup.ensureBucketedTable(spark, root, dfIndexTableName(root),
       "g STRING, doc_count BIGINT, batch_id BIGINT", buckets)
   }
@@ -968,14 +966,10 @@ object Dedup {
     * [[requireProbeAboveDfHorizon]] rejects such probes instead of
     * letting every gram read as absent (falsely novel).
     *
-    * Path form swaps atomically ([[SketchState.swapInState]] — a
-    * complete state exists on disk at every instant, crashes heal on
-    * next touch); the bucketed form stages a fully-written BUCKETED
-    * sibling (same spec, marker included) and renames it in under the
-    * table's LOCATION, then refreshes — the rename pair is the same
-    * swap discipline, so a crash leaves either the old or the new
-    * state, never a half-compacted mix a summing reader would
-    * misreport. */
+    * Both forms commit by [[graft.Swap.swap]] (the bucketed form stages
+    * a fully-written BUCKETED sibling, same spec and marker, then
+    * refreshes), so a crash leaves the old or the new state, never a
+    * half-compacted mix a summing reader would misreport. */
   def compactSavedDfIndex(spark: org.apache.spark.sql.SparkSession,
       root: String, upToBatchId: Long, buckets: Int = 16): Unit = {
     require(upToBatchId >= 1,
@@ -1049,7 +1043,7 @@ object Dedup {
   def savedDfIndexCompactionHorizon(
       spark: org.apache.spark.sql.SparkSession,
       root: String): Option[Long] = {
-    SuffixDedup.recoverSavedIndex(spark, root) // heal a crashed swap
+    graft.Swap.heal(spark, root) // heal a crashed swap
     val marker = new org.apache.hadoop.fs.Path(root, DfHorizonFile)
     val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(marker)) None

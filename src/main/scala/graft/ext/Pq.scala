@@ -145,12 +145,11 @@ object Pq {
   }
 
   /** Load a [[saveEncoded]] layout: the model plus the lazily-read
-    * codes frame (feed it to [[searchTopK]] as `encoded`). Heals a
-    * [[deleteFromSaved]] swap crashed between its two renames first
-    * ([[SketchState.recoverState]] discipline). */
+    * codes frame (feed it to [[searchTopK]] as `encoded`), after
+    * [[graft.Swap.heal]]. */
   def loadEncoded(spark: org.apache.spark.sql.SparkSession,
       root: String): (Model, DataFrame) = {
-    SuffixDedup.recoverSavedIndex(spark, s"$root/codes")
+    graft.Swap.heal(spark, s"$root/codes")
     (load(spark, s"$root/codebooks"), spark.read.parquet(s"$root/codes"))
   }
 
@@ -168,7 +167,7 @@ object Pq {
     * cadence as every saved-state compaction in this library). */
   def appendToSaved(spark: org.apache.spark.sql.SparkSession, root: String,
       batch: DataFrame, idCol: String, vecCol: String): Unit = {
-    SuffixDedup.recoverSavedIndex(spark, s"$root/codes") // see loadEncoded
+    graft.Swap.heal(spark, s"$root/codes") // see loadEncoded
     val model = load(spark, s"$root/codebooks")
     val saved = spark.read.parquet(s"$root/codes").schema
     val savedId = saved.fieldNames.filter(_ != "codes").head
@@ -188,11 +187,9 @@ object Pq {
     * which is why THAT erase must sometimes re-draw).
     *
     * Codes are doc-keyed, so the delete is exact with no survivor
-    * scan: one anti-join rewrite of the codes frame, swapped in
-    * atomically by the [[SketchState.swapInState]] discipline — a
-    * complete codes table exists on disk at every instant, and a
-    * mid-swap crash heals on the next touch ([[loadEncoded]] /
-    * [[appendToSaved]] / this method all recover first). A full
+    * scan: one anti-join rewrite of the codes frame, committed by
+    * [[graft.Swap.swap]] ([[loadEncoded]] / [[appendToSaved]] / this
+    * method heal first). A full
     * rewrite is the honest trade here: the codes frame is m small
     * ints per doc (~64× smaller than the vectors — the reason PQ
     * exists), and it carries no partition/bucket key to rewrite
@@ -204,7 +201,7 @@ object Pq {
   def deleteFromSaved(spark: org.apache.spark.sql.SparkSession,
       root: String, ids: DataFrame, idCol: String): Unit = {
     val codesPath = s"$root/codes"
-    SuffixDedup.recoverSavedIndex(spark, codesPath)
+    graft.Swap.heal(spark, codesPath)
     val saved = spark.read.parquet(codesPath)
     val savedId = saved.schema.fieldNames.filter(_ != "codes").head
     val del = ids
@@ -225,11 +222,9 @@ object Pq {
     * the ADC scan. This rewrites the codes into
     * `ceil(bytes / targetBytes)` files (the `LakeIO.compactParquet`
     * sizing over an UNPARTITIONED frame — the codes carry no
-    * partition/bucket key by design, see [[deleteFromSaved]]) under
-    * the same swap/heal discipline as the erase: the rewrite lands in
-    * a dot-sibling, renames in atomically, and a crash between the
-    * renames heals at [[loadEncoded]]/[[appendToSaved]]'s recover
-    * step. A no-op when the layout is already at or under the target
+    * partition/bucket key by design, see [[deleteFromSaved]]),
+    * committed by [[graft.Swap.swap]] like the erase. A no-op when the
+    * layout is already at or under the target
     * file count. Requires quiesced writers, like every saved-state
     * compaction here. Search results are byte-identical before and
     * after (spec-pinned): compaction moves rows between files, never
@@ -238,7 +233,7 @@ object Pq {
       targetBytes: Long = 128L * 1024 * 1024): Unit = {
     require(targetBytes > 0, "targetBytes must be positive")
     val codesPath = s"$root/codes"
-    SuffixDedup.recoverSavedIndex(spark, codesPath)
+    graft.Swap.heal(spark, codesPath)
     val (files, bytes) = graft.fred.io.LakeIO.parquetCensus(spark, codesPath)
     val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes)
       .min(files).toInt

@@ -721,8 +721,11 @@ object SemDedup {
       fs.delete(new org.apache.hadoop.fs.Path(root, semNCentersMarkerName),
         false)
     }
-    fs.delete(tmp, true)
+    // sentinel FIRST (the Ivf staged-erase order): a crash partway
+    // through the stage delete must not let a heal re-run this finish
+    // from a stamped stage that has lost `assigned/` files
     fs.delete(semRebuildMarker(root), false)
+    fs.delete(tmp, true)
   }
 
   /** Re-quantize the saved state under a NEW center count — the

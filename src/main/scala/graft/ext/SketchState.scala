@@ -46,28 +46,6 @@ object SketchState {
 
   private val BatchIdFile = "_graft_batch_id"
 
-  /** Heal a state root lost to a crash between [[swapInState]]'s two
-    * renames (prior state moved aside, new copy not yet in): if the
-    * root is missing but the aside copy exists, rename it back. Every
-    * reader and merger calls this before touching the root.
-    *
-    * A stale aside NEXT TO a live root is the mirror crash — the
-    * rename-in landed but the final aside-delete didn't. The aside
-    * then holds the complete PRE-swap state, which for an erasure swap
-    * ([[graft.ext.Pq.deleteFromSaved]]'s codes rewrite) is the erased
-    * rows' last on-disk copy: right-to-erasure must not leave it
-    * lingering in a hidden sibling indefinitely. The swap already
-    * committed (the root IS the new state), so the purge finishes it. */
-  private[ext] def recoverState(fs: org.apache.hadoop.fs.FileSystem,
-      root: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val aside = sibling(root, ".swap_old")
-    if (!fs.exists(p) && fs.exists(aside))
-      require(fs.rename(aside, p), s"could not restore $root from $aside")
-    else if (fs.exists(p) && fs.exists(aside))
-      fs.delete(aside, true)
-  }
-
   /** THE path-form saved-state reader (shared by every path-parquet
     * index/state root — the gram/fingerprint key indexes, the df
     * index, the PII counts): heals a crashed swap first, REFUSES a
@@ -82,7 +60,7 @@ object SketchState {
       : org.apache.spark.sql.DataFrame = {
     val p = new org.apache.hadoop.fs.Path(root)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    recoverState(fs, root)
+    graft.Swap.heal(fs, p)
     if (fs.exists(p)) {
       val names = fs.listStatus(p).map(_.getPath.getName)
       // a bucketed root must never flow through the path form (reads
@@ -115,7 +93,7 @@ object SketchState {
   def lastAppliedBatchId(spark: SparkSession, root: String): Option[Long] = {
     val marker = new org.apache.hadoop.fs.Path(root, BatchIdFile)
     val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-    recoverState(fs, root)
+    graft.Swap.heal(fs, marker.getParent)
     if (!fs.exists(marker)) None
     else {
       val in = fs.open(marker)
@@ -177,41 +155,25 @@ object SketchState {
     * lake ([[graft.streaming.CorpusStreams.propagateDocDelete]]'s
     * scaladoc carries the operational contract). */
   def resetState(spark: SparkSession, root: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(p, true)
-    fs.delete(sibling(root, ".swap_old"), true)
-    fs.delete(sibling(root, ".swap_tmp"), true)
+    val tmp = sibling(root, ".swap_tmp")
+    val fs = tmp.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.delete(tmp, true)
+    graft.Swap.swap(fs, new org.apache.hadoop.fs.Path(root), tmp)
   }
 
   /** Crash-safe replacement of the saved state at `root` (r14 ADVICE
     * #2): `mode("overwrite")` in place deletes the directory BEFORE
     * writing, so a crash mid-write destroys the only copy of the
-    * accumulated state. Here `write` lands the new state in a
-    * dot-prefixed sibling temp dir first, the prior state moves aside,
-    * the temp renames in, and only then does the aside copy drop — a
-    * complete state exists on disk at every instant
-    * ([[graft.fred.io.LakeIO]]'s dot-temp + rename discipline). A
-    * crash between the renames is healed by [[recoverState]] on the
-    * next touch; a failed rename-in restores the prior state before
-    * rethrowing. */
+    * accumulated state. Here `write` lands the new state in the
+    * dot-prefixed sibling `.<name>.swap_tmp` and [[graft.Swap.swap]]
+    * commits it; every reader heals with [[graft.Swap.heal]] first. */
   private[ext] def swapInState(spark: SparkSession, root: String)
       (write: String => Unit): Unit = {
     val tmp = sibling(root, ".swap_tmp")
-    val aside = sibling(root, ".swap_old")
     val fs = tmp.getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(tmp, true)
     write(tmp.toString)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    fs.delete(aside, true)
-    if (fs.exists(rootPath))
-      require(fs.rename(rootPath, aside), s"could not move aside $root")
-    if (!fs.rename(tmp, rootPath)) {
-      // never leave zero live copies: put the prior state back first
-      if (fs.exists(aside)) fs.rename(aside, rootPath)
-      throw new IllegalStateException(s"could not swap $tmp into $root")
-    }
-    fs.delete(aside, true)
+    graft.Swap.swap(fs, new org.apache.hadoop.fs.Path(root), tmp)
   }
 
   /** [[swapInState]] for the common bounded-table shape: materialize
@@ -278,7 +240,7 @@ object SketchState {
     val bs = hllRegisters(batch, keyCol, p)
     val path = new org.apache.hadoop.fs.Path(root)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    recoverState(fs, root)
+    graft.Swap.heal(fs, path)
     val merged =
       if (fs.exists(path))
         spark.read.parquet(root).unionByName(bs)
@@ -314,8 +276,7 @@ object SketchState {
 
   /** Saved-state read with mid-swap crash recovery. */
   private def readState(spark: SparkSession, root: String): DataFrame = {
-    recoverState(new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf()), root)
+    graft.Swap.heal(spark, root)
     spark.read.parquet(root)
   }
 
@@ -506,7 +467,7 @@ object SketchState {
     val bs = bloomWords(batch, keyCol, bits, hashes)
     val path = new org.apache.hadoop.fs.Path(root)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    recoverState(fs, root)
+    graft.Swap.heal(fs, path)
     val merged =
       if (fs.exists(path))
         spark.read.parquet(root).unionByName(bs)
@@ -594,8 +555,7 @@ object SketchState {
 
   /** Rebuild the persisted summary. */
   def loadGk(spark: SparkSession, root: String): QuantileSummaries = {
-    recoverState(new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf()), root)
+    graft.Swap.heal(spark, root)
     val meta = spark.read.parquet(root + "/meta").head()
     val sampled = spark.read.parquet(root + "/sampled")
       .orderBy("idx")

@@ -880,16 +880,10 @@ object SuffixDedup {
       spark: org.apache.spark.sql.SparkSession, root: String,
       tbl: String, columnsDdl: String, buckets: Int): DataFrame = {
     require(buckets > 0, "buckets must be positive")
-    // EVERY bucketed-state reader and writer funnels through here, so
-    // this is the choke point that heals a compaction swap
-    // ([[compactBucketedState]] / SketchState.swapInState) crashed
-    // between its two renames: the root is missing and the only
-    // complete state sits in the .swap_old sibling — without the
-    // restore, probes would silently read an EMPTY state (duplicates
-    // admitted), folds would repopulate a fresh root, and a later
-    // compaction's cleanup would permanently destroy the real state
-    // (r17 ADVICE #1).
-    recoverSavedIndex(spark, root)
+    // EVERY bucketed-state reader and writer funnels through here: heal
+    // a crashed compaction swap first, or probes read an EMPTY state and
+    // a later compaction destroys the real one (r17 ADVICE #1)
+    graft.Swap.heal(spark, root)
     if (!spark.catalog.tableExists(tbl)) {
       validateOrPinBuckets(spark, root, buckets)
       // escape the path for the string literal: a quote or backslash
@@ -921,14 +915,11 @@ object SuffixDedup {
     * 100 TB. This rewrites the caller's `rows` (normally the live
     * table's rows, exact-duplicate transients collapsed) into ONE
     * fresh file per bucket: the repartition on `g` IS the bucket hash,
-    * so each bucket lands in exactly one task's single file. Same swap
-    * discipline as [[graft.ext.Dedup.compactSavedDfIndex]]'s bucketed
-    * form — a fully-written bucketed sibling (bucket marker re-pinned
-    * by the CREATE) renames in under the table's LOCATION, so a crash
-    * leaves either the old or the new state, never a mix; a crash
-    * between the two renames heals at [[ensureBucketedTable]]'s
-    * recover step on the next touch. Requires quiesced writers (the
-    * single-writer stream pauses for the compaction tick). */
+    * so each bucket lands in exactly one task's single file. A
+    * fully-written bucketed sibling (bucket marker re-pinned by the
+    * CREATE) commits by [[graft.Swap.swap]] under the table's LOCATION;
+    * [[ensureBucketedTable]] heals a crashed one. Requires quiesced
+    * writers (the single-writer stream pauses for the compaction tick). */
   private[ext] def compactBucketedState(
       spark: org.apache.spark.sql.SparkSession, root: String,
       tblPrefix: String, columnsDdl: String, buckets: Int,
@@ -1095,10 +1086,7 @@ object SuffixDedup {
     * expensive; pass `keep` for the exact form.
     *
     *   - `buckets == 0` (path-parquet index): one distributed
-    *     anti-join rewrite, swapped in atomically by the
-    *     [[SketchState.swapInState]] discipline — a complete index
-    *     exists on disk at every instant, and a mid-swap crash heals
-    *     on the next touch.
+    *     anti-join rewrite, committed by [[graft.Swap.swap]].
     *   - `buckets > 0` (bucketed table, [[savedGramIndexBucketed]]):
     *     ONLY the bucket files that contain a deleted key rewrite —
     *     untouched bucket files stay byte-identical (at 100 TB the
@@ -1123,17 +1111,6 @@ object SuffixDedup {
     * folds with no per-key residue to subtract (documented here
     * rather than pretended at): the erasure path is a rebuild from
     * the surviving lake after [[SketchState]] state is reset. */
-  /** Heal a path-parquet index root lost to a crash between
-    * [[deleteKeysFromSavedIndex]]'s two renames — every reader and
-    * updater of a swap-managed index calls this before touching the
-    * root (the [[SketchState.recoverState]] discipline, exported for
-    * the index roots that non-`ext` readers touch directly). */
-  def recoverSavedIndex(spark: org.apache.spark.sql.SparkSession,
-      root: String): Unit =
-    SketchState.recoverState(
-      new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sessionState.newHadoopConf()), root)
-
   def deleteKeysFromSavedIndex(spark: org.apache.spark.sql.SparkSession,
       root: String, keys: DataFrame, keep: Option[DataFrame] = None,
       buckets: Int = 0): Unit = {
@@ -1189,10 +1166,9 @@ object SuffixDedup {
       fs.delete(tmp, true)
       spark.catalog.refreshTable(tbl)
     } else {
-      recoverSavedIndex(spark, root) // a crashed prior erasure must
-      // restore BEFORE the existence check — returning on a missing
-      // root while .swap_old holds the pre-delete state would report
-      // success and let the next reader resurrect the deleted keys
+      // heal BEFORE the existence check: a root whose aside holds the
+      // pre-delete state must not report success with nothing erased
+      graft.Swap.heal(spark, root)
       val path = new org.apache.hadoop.fs.Path(root)
       val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
       if (!fs.exists(path)) return

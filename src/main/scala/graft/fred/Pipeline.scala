@@ -138,8 +138,6 @@ class Pipeline(spark: SparkSession, source: FredSource, lakeRoot: String,
       // silently remove nothing while reporting success, a failed
       // right-to-erasure (r15 ADVICE #1). Build the leaf with the
       // same escaping the writer used.
-      def esc(v: String): String = org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils.escapePathName(v)
       def drop(root: String, leaf: String): Unit = {
         val p = new org.apache.hadoop.fs.Path(s"$root/$leaf")
         val fs = p.getFileSystem(conf)
@@ -151,8 +149,10 @@ class Pipeline(spark: SparkSession, source: FredSource, lakeRoot: String,
         else if (!fs.delete(p, true))
           sys.error(s"could not delete partition leaf $p")
       }
-      val monthLeaf = s"indicator=${esc(seriesId)}/observation_year=$year" +
-        s"/observation_month=$month"
+      val yearLeaf = LakeIO.leafPath(
+        Seq("indicator" -> seriesId, "observation_year" -> year))
+      val monthLeaf = s"$yearLeaf/" +
+        LakeIO.leafPath(Seq("observation_month" -> month))
       drop(bronzeRoot, monthLeaf)
       drop(silverRoot, monthLeaf)
       val silverYear = LakeIO
@@ -160,7 +160,7 @@ class Pipeline(spark: SparkSession, source: FredSource, lakeRoot: String,
         .where(col("indicator") === seriesId &&
           col("observation_year") === year)
       if (silverYear.isEmpty)
-        drop(goldRoot, s"indicator=${esc(seriesId)}/observation_year=$year")
+        drop(goldRoot, yearLeaf)
       else
         LakeIO.writeParquet(YearlyGold.toGold(silverYear), goldRoot,
           Seq("indicator", "observation_year"))

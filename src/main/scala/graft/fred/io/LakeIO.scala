@@ -209,17 +209,10 @@ object LakeIO {
     * maintenance job touches the hot tail only). Fragmented leaves
     * are read with `basePath` (partition columns preserved), written
     * compacted to a dot-prefixed temp dir under `root` (invisible to
-    * readers — Spark skips dot-dirs), then SWAPPED in via one
-    * FS rename per partition (atomic per partition on HDFS/POSIX;
-    * the old leaf is renamed aside first and deleted after, so a
-    * crash mid-swap strands at most a `.compact_old` aside — never a
-    * half-written visible partition — and [[healPartitionSwaps]],
-    * wired into the top of this op and [[deleteWhere]], restores a
-    * leaf whose only copy is its aside and purges stale asides whose
-    * swap landed). Untouched partitions keep their exact files.
-    * Global atomicity across partitions is a table format's job
-    * (Iceberg/Delta `rewrite_data_files` = this + a catalog
-    * transaction) — caveat stated, like [[compactParquet]].
+    * readers — Spark skips dot-dirs), then swapped in one leaf at a
+    * time by [[graft.Swap.swap]]; [[healPartitionSwaps]], wired into
+    * the top of this op and [[deleteWhere]], finishes a swap a crash
+    * interrupted. Untouched partitions keep their exact files.
     *
     * Returns (partitions_compacted, files_before, files_after) over
     * the whole root. */
@@ -257,12 +250,7 @@ object LakeIO {
       val tmpLeaf = new org.apache.hadoop.fs.Path(tmp, rel)
       require(fs.exists(tmpLeaf),
         s"compacted output missing for partition $rel — aborting swap")
-      val aside = new org.apache.hadoop.fs.Path(
-        leaf.getParent, s".compact_old_${leaf.getName}")
-      fs.delete(aside, true)
-      require(fs.rename(leaf, aside), s"could not move aside $leaf")
-      require(fs.rename(tmpLeaf, leaf), s"could not swap in $tmpLeaf")
-      fs.delete(aside, true)
+      graft.Swap.swap(fs, leaf, tmpLeaf)
     }
     fs.delete(tmp, true)
     (frag.size.toLong, filesBefore, partitionCensus(spark, root).map(_._2).sum)
@@ -276,15 +264,15 @@ object LakeIO {
     * one user is absurd; the delete job touches the affected leaves
     * only — this is Iceberg/Delta `DELETE WHERE`'s copy-on-write
     * path, minus their catalog transaction, caveat as stated on
-    * [[compactFragmented]]).
+    * [[graft.Swap]]).
     *
     * Mechanics: one predicate scan finds the affected partition
     * tuples (parquet min/max stats prune files the predicate cannot
     * match even inside unpruned partitions); only those leaves are
     * re-read, anti-filtered, written to a dot-prefixed temp dir
-    * (invisible to readers) and SWAPPED in per partition with the
-    * [[compactFragmented]] rename discipline — a partition whose rows
-    * ALL matched comes back empty and its leaf is removed outright.
+    * (invisible to readers) and swapped in per partition by
+    * [[graft.Swap.swap]] — a partition whose rows ALL matched has no
+    * staged leaf, so its live leaf is removed outright.
     * Non-affected partitions are never read past the probe scan.
     *
     * @return (partitions_rewritten, rows_deleted) */
@@ -301,12 +289,8 @@ object LakeIO {
     if (probe.isEmpty) return (0L, 0L)
     val rowsDeleted = probe.map(_.getLong(partitionCols.size)).sum
     val qRoot = fs.makeQualified(rootPath).toString
-    // hive layout: root/col1=v1/col2=v2 — values here are the
-    // identifier/int partition keys this lake writes; callers with
-    // special-character partition values need hive escaping (stated)
     val leaves = probe.map { r =>
-      partitionCols.zipWithIndex
-        .map { case (c, i) => s"$c=${r.get(i)}" }.mkString("/")
+      leafPath(partitionCols.zipWithIndex.map { case (c, i) => c -> r.get(i) })
     }
     val tmp = new org.apache.hadoop.fs.Path(rootPath, ".delete_tmp")
     fs.delete(tmp, true)
@@ -322,59 +306,31 @@ object LakeIO {
       .write.mode(SaveMode.Overwrite)
       .partitionBy(partitionCols: _*)
       .parquet(tmp.toString)
-    // The swap loop is per-leaf atomic but NOT transactional across
-    // leaves: a failure mid-loop leaves earlier leaves rewritten and
-    // later ones untouched (each leaf is individually consistent —
-    // re-running the same deleteWhere converges). Within one leaf, a
-    // failed swap-in restores the original partition before rethrowing
-    // so readers never see the partition missing (r14 ADVICE #3).
     leaves.foreach { rel =>
-      val leaf = new org.apache.hadoop.fs.Path(s"$qRoot/$rel")
-      val tmpLeaf = new org.apache.hadoop.fs.Path(tmp, rel)
-      val aside = new org.apache.hadoop.fs.Path(
-        leaf.getParent, s".delete_old_${leaf.getName}")
-      fs.delete(aside, true)
-      require(fs.rename(leaf, aside), s"could not move aside $leaf")
-      // a fully-deleted partition has no compacted output: drop it
-      if (fs.exists(tmpLeaf) && !fs.rename(tmpLeaf, leaf)) {
-        // put the original leaf back before failing — the aside dir is
-        // dot-prefixed (invisible), so leaving it there would present
-        // readers a silently-missing partition
-        fs.rename(aside, leaf)
-        throw new IllegalStateException(
-          s"could not swap in $tmpLeaf; original $leaf restored")
-      }
-      fs.delete(aside, true)
+      graft.Swap.swap(fs, new org.apache.hadoop.fs.Path(s"$qRoot/$rel"),
+        new org.apache.hadoop.fs.Path(tmp, rel))
     }
     fs.delete(tmp, true)
     (leaves.length.toLong, rowsDeleted)
   }
 
-  /** Heal the per-partition swap asides a crashed [[compactFragmented]]
-    * or [[deleteWhere]] leaves behind — wired into the top of both ops
-    * (the maintenance-cadence choke point; plain lake roots have no
-    * reader funnel to intercept, so run this after a crash before
-    * trusting reads). Walks the partition tree for
-    * `.compact_old_*` / `.delete_old_*` siblings:
-    *
-    *   - visible leaf MISSING → rename the aside back. The crash hit
-    *     between the two renames and the aside holds the partition's
-    *     ONLY copy — without the restore every read silently misses
-    *     that partition (the dot-prefix hides the aside from Spark).
-    *   - visible leaf PRESENT → delete the stale aside. The swap
-    *     landed; for [[deleteWhere]] the aside is the deleted rows'
-    *     LAST on-disk copy, and right-to-be-forgotten must not leave
-    *     it lingering in a hidden sibling.
-    *
-    * One state is ambiguous: a FULLY-deleted partition's crash between
-    * its move-aside and its aside-drop looks identical to a crashed
-    * swap-in (leaf missing, aside present). The heal RESTORES — the
-    * convergent choice: re-delivering the same `deleteWhere`
-    * re-deletes it (predicate semantics, idempotent), whereas guessing
-    * "drop" in the other case would destroy a compacted partition's
-    * survivors outright. Erasure callers therefore re-deliver after a
-    * crash, the standing contract for every erasure path in this
-    * library.
+  /** Hive-style leaf path of one partition tuple, escaped exactly as
+    * Spark's partitioned writer escapes it (`A:B` → `indicator=A%3AB`,
+    * null → `__HIVE_DEFAULT_PARTITION__`) — the lake's one escaping
+    * rule for every path built from partition values. */
+  def leafPath(parts: Seq[(String, Any)]): String =
+    parts.map { case (c, v) =>
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .getPartitionPathString(c, Option(v).map(_.toString).orNull)
+    }.mkString("/")
+
+  /** Heal the partition swaps a crashed [[compactFragmented]] or
+    * [[deleteWhere]] left behind — wired into the top of both ops (the
+    * maintenance-cadence choke point; plain lake roots have no reader
+    * funnel to intercept, so run this after a crash before trusting
+    * reads). Walks the partition tree and runs [[graft.Swap.heal]] on
+    * every leaf that has a swap sibling. A restored leaf is logged: it
+    * is a rewrite a crash undid, which re-running the op redoes.
     *
     * @return (leaves_restored, stale_asides_purged) */
   def healPartitionSwaps(spark: SparkSession, root: String): (Long, Long) = {
@@ -383,33 +339,23 @@ object LakeIO {
     if (!fs.exists(rootPath)) return (0L, 0L)
     var restored = 0L
     var purged = 0L
-    val aside = "^\\.(?:compact_old_|delete_old_)(.+)$".r
     def walk(dir: org.apache.hadoop.fs.Path): Unit =
       fs.listStatus(dir).filter(_.isDirectory).foreach { e =>
-        e.getPath.getName match {
-          case aside(orig) =>
+        val n = e.getPath.getName
+        graft.Swap.liveName(n) match {
+          case Some(orig) =>
             val leaf = new org.apache.hadoop.fs.Path(dir, orig)
-            if (!fs.exists(leaf)) {
-              require(fs.rename(e.getPath, leaf),
-                s"could not restore $leaf from ${e.getPath}")
-              // name WHICH partitions came back (r19 ADVICE #5): for a
-              // crashed fully-deleted partition the restore quietly
-              // resurrects erased rows until the caller re-delivers
-              // the delete (the documented convergent choice) — an
-              // erasure operator watching this log can re-deliver
-              // promptly instead of discovering the rows in an audit
-              System.err.println(
-                s"[graft] healPartitionSwaps: restored $leaf from a " +
-                  "crashed swap aside — if this partition was being " +
-                  "DELETED, re-deliver the deleteWhere")
-              restored += 1
-            } else {
-              fs.delete(e.getPath, true)
-              purged += 1
+            graft.Swap.heal(fs, leaf) match {
+              case graft.Swap.Restored =>
+                System.err.println(s"[graft] healPartitionSwaps: restored " +
+                  s"$leaf from a crashed swap aside")
+                restored += 1
+              case graft.Swap.Purged => purged += 1
+              case graft.Swap.Clean => ()
             }
-          case n if !n.startsWith(".") && !n.startsWith("_") =>
+          case None if !n.startsWith(".") && !n.startsWith("_") =>
             walk(e.getPath)
-          case _ => ()
+          case None => ()
         }
       }
     walk(rootPath)

@@ -233,7 +233,7 @@ object CorpusStreams {
     // gate silently pass everything as clean forever — a typoed root
     // or a forgotten one-time build must fail loudly at the first
     // batch, not report all-clear
-    graft.ext.SuffixDedup.recoverSavedIndex(spark, benchIndexRoot)
+    graft.Swap.heal(spark, benchIndexRoot)
     val rootPath = new org.apache.hadoop.fs.Path(benchIndexRoot)
     require(rootPath.getFileSystem(spark.sessionState.newHadoopConf())
         .exists(rootPath),

@@ -463,4 +463,53 @@ class SemDedupSpec extends SparkSpec {
         floor = 0.9, batchId = 1L, buckets = 4, maxBatch = 3)
       .count() == unguarded.size.toLong)
   }
+
+  test("rebuild finish: a crash anywhere in the stage delete loses no survivor") {
+    // every delete under the stage fails in turn, through the session's
+    // file system: the commit deletes the sentinel before the stage, so
+    // a partial stage can never be re-committed by the next heal
+    import graft.FaultFs
+    spark.conf.set("fs.file.impl", classOf[FaultFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    try {
+      // the state a heal leaves after the rebuild met `fault`
+      def rebuildWith(fault: String => FaultFs.Fault)
+          : (FaultFs.Fault, scala.util.Try[Set[Long]]) = {
+        val root = freshRoot()
+        SemDedup.updateSavedSemanticState(root, refRows.toDF("vec_id", "embedding"),
+          "vec_id", "embedding", nCenters = 3, batchId = 0L, buckets = 4)
+        val f = fault(new org.apache.hadoop.fs.Path(root, ".sem_rebuild_tmp")
+          .toUri.getPath)
+        FaultFs.installed = f
+        try SemDedup.rebuildSavedSemanticState(spark, root, Seq(2L).toDF("g"),
+          buckets = 4)
+        catch { case _: Exception if f.tripped => () }
+        finally FaultFs.installed = FaultFs.census("/")
+        (f, scala.util.Try {
+          SemDedup.healSemanticState(spark, root, 4)
+          spark.catalog.refreshTable(SemDedup.semanticAssignedTableName(root))
+          SemDedup.savedSemanticAssigned(spark, root, 4)
+            .select($"doc".as[Long]).collect().toSet
+        })
+      }
+      val (clean, cleanDocs) = rebuildWith(FaultFs.census(_, Set("delete")))
+      assert(cleanDocs.get == Set(4L, 6L))
+      val n = clean.count
+      assert(n > 3, s"the stage delete expands to only $n deletes")
+      // a crash before the commit (the stale-stage delete, the writers'
+      // own cleanup) leaves the live state intact; one after it leaves
+      // the rebuilt state — anything else lost survivors
+      val bad = (1 to n).flatMap { k =>
+        val (f, docs) = rebuildWith(
+          new FaultFs.Fault(Set("delete"), _, k, crash = true))
+        assert(f.tripped, s"delete #$k of $n never ran")
+        if (docs.toOption.exists(d => d == Set(2L, 4L, 6L) || d == Set(4L, 6L))) None
+        else Some(s"#$k -> $docs")
+      }
+      assert(bad.isEmpty, s"crash points of $n that lost survivors: $bad")
+    } finally {
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
+    }
+  }
 }

@@ -109,6 +109,35 @@ class DeleteWhereSpec extends SparkSpec {
     assert(spark.read.parquet(root).filter(col("user") === "u2").count() == 0L)
   }
 
+  test("special-character partition values: the escaped leaves are found and only they rewrite") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_delete_esc").toString + "/lake"
+    val rows = for {
+      ind <- Seq("A:B", "C%D", "E"); y <- Seq(2023, 2024); d <- 1 to 4
+    } yield (ind, y, d, s"u${d % 2}")
+    LakeIO.writeParquet(
+      rows.toDF("indicator", "observation_year", "observation_day", "user"),
+      root, parts)
+    assert(new java.io.File(root, "indicator=A%3AB").isDirectory,
+      "fixture: Spark escapes ':' in the partition directory")
+    val before = census(root)
+    val (nPart, nRows) = LakeIO.deleteWhere(spark, root,
+      col("indicator") === "A:B" && col("user") === "u1", parts)
+    assert(nPart == 2L && nRows == 4L)
+    val after = census(root)
+    assert(before.filter(!_._1.contains("indicator=A%3AB"))
+      .forall { case (f, meta) => after.get(f).contains(meta) },
+      "every other partition must keep its exact files")
+    val left = spark.read.parquet(root)
+    assert(left.count() == 24L - 4L)
+    assert(left.filter(col("indicator") === "A:B").count() == 4L &&
+      left.filter(col("indicator") === "A:B" && col("user") === "u1").isEmpty)
+    // a fully-matching partition with a '%' in its value drops too
+    assert(LakeIO.deleteWhere(spark, root, col("indicator") === "C%D", parts) ==
+      ((2L, 8L)))
+    assert(spark.read.parquet(root).filter(col("indicator") === "C%D").isEmpty)
+  }
+
   test("healPartitionSwaps: a missing leaf restores from its aside; a stale aside purges (erased rows leave no hidden copy)") {
     val root = freshLake()
     val all = spark.read.parquet(root).count()
@@ -118,8 +147,7 @@ class DeleteWhereSpec extends SparkSpec {
     // invisible aside — every read silently misses the partition
     val leaf = new org.apache.hadoop.fs.Path(
       s"$root/indicator=A/observation_year=2023")
-    val aside = new org.apache.hadoop.fs.Path(
-      leaf.getParent, ".delete_old_" + leaf.getName)
+    val aside = graft.Swap.aside(leaf)
     assert(fs.rename(leaf, aside), "fixture: strand the leaf in its aside")
     assert(spark.read.parquet(root).count() < all,
       "fixture: the stranded partition must be invisible to reads")
