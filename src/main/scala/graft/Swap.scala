@@ -3,9 +3,10 @@ package graft
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** THE crash-safe replacement of one live directory: every saved-state
-  * root ([[graft.ext.SketchState.swapInState]] and what is built on it)
-  * and every lake leaf that [[graft.fred.io.LakeIO.compactFragmented]]
-  * or [[graft.fred.io.LakeIO.deleteWhere]] rewrites commits here. The
+  * root ([[graft.ext.SketchState.swapInState]] and what is built on it),
+  * every lake leaf that [[graft.fred.io.LakeIO.compactFragmented]]
+  * or [[graft.fred.io.LakeIO.deleteWhere]] rewrites, and every leaf that
+  * [[graft.fred.Pipeline.propagateDelete]] erases commits here. The
   * reference overwrites in place (`load_bytes(replace=True)`), which
   * deletes the only copy before the new one lands.
   *

@@ -138,16 +138,23 @@ class Pipeline(spark: SparkSession, source: FredSource, lakeRoot: String,
       // silently remove nothing while reporting success, a failed
       // right-to-erasure (r15 ADVICE #1). Build the leaf with the
       // same escaping the writer used.
+      //
+      // An erase commits through Swap with no staged copy: one rename to
+      // `.<leaf>.swap_del` hides the whole leaf, so a crash while its
+      // files are purged never shows a month with fewer rows. The heal
+      // first finishes such a crash.
       def drop(root: String, leaf: String): Unit = {
         val p = new org.apache.hadoop.fs.Path(s"$root/$leaf")
         val fs = p.getFileSystem(conf)
+        graft.Swap.heal(fs, p)
         if (!fs.exists(p))
           // absence is legal (idempotent re-run; never-extracted
           // month) but must be VISIBLE: a compliance run diffing this
           // log against its erasure list catches a wrong leaf
           System.err.println(s"[pipeline] delete: no leaf to drop at $p")
-        else if (!fs.delete(p, true))
-          sys.error(s"could not delete partition leaf $p")
+        else
+          graft.Swap.swap(fs, p,
+            new org.apache.hadoop.fs.Path(p.getParent, s".${p.getName}.never_staged"))
       }
       val yearLeaf = LakeIO.leafPath(
         Seq("indicator" -> seriesId, "observation_year" -> year))

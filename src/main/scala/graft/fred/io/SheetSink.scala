@@ -1,6 +1,6 @@
 package graft.fred.io
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
@@ -13,19 +13,18 @@ import org.apache.spark.sql.types.StructType
   * environment, so — like [[FredSource]] — the sink is a trait with an
   * in-memory fake; a real Sheets client implements ONLY the trait.
   *
-  * A sheet is a driver-side, bounded serving surface (the reference
-  * appends via a row-loop over a client handle), so the collect here is
-  * the honest shape — guarded by `maxAppendRows` so a mis-pointed lake
-  * scan fails loudly instead of materializing unbounded rows on the
-  * driver. The dedup half stays fully distributed: a broadcast
-  * left-anti join ([[graft.fred.ops.DedupSync.newRows]]) against the
-  * sheet's (small) key set.
+  * A sheet is a driver-side, bounded serving surface: the reference
+  * holds its rows (`get_all_values`) and their key set in memory and
+  * appends via a row-loop over a client handle. [[syncAppend]] keeps the
+  * key set on the driver too, so the sync is one Spark job, and
+  * `maxAppendRows` makes a mis-pointed lake scan fail loudly instead of
+  * materializing unbounded rows on the driver.
   */
 trait SheetSink {
   /** Column shape of the sheet. */
   def schema: StructType
-  /** Current sheet contents as a frame (small by construction). */
-  def read(spark: SparkSession): DataFrame
+  /** Current sheet contents, on the driver (small by construction). */
+  def rows: Seq[Row]
   /** Append rows (already deduplicated by the caller). */
   def append(rows: Seq[Row]): Unit
 }
@@ -35,10 +34,7 @@ object SheetSink {
   /** In-memory fake — the test/sandbox stand-in for a Sheets client. */
   class InMemory(val schema: StructType) extends SheetSink {
     private val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-    def read(spark: SparkSession): DataFrame = {
-      val snapshot = synchronized { buf.toList }
-      spark.createDataFrame(spark.sparkContext.parallelize(snapshot), schema)
-    }
+    def rows: Seq[Row] = synchronized { buf.toList }
     def append(rows: Seq[Row]): Unit = synchronized { buf ++= rows }
     def size: Int = synchronized { buf.size }
   }
@@ -47,14 +43,36 @@ object SheetSink {
     * the sheet are appended; returns the number appended. Idempotent —
     * a second sync of the same frame appends nothing
     * (`load_fred_data_to_google.py:108-131`).
+    *
+    * One Spark job: each task drops the rows whose key is in the
+    * broadcast key set and returns at most `maxAppendRows + 1` of the
+    * rest, so the driver holds at most `partitions × (maxAppendRows + 1)`
+    * rows before the guard throws on more than `maxAppendRows` in total.
+    * Keys match as in [[graft.fred.ops.DedupSync.newRows]]' left anti
+    * join: a key with a null component never matches, so its row is
+    * appended. Keys compare by equality of their Row values, so each key
+    * column must have one type on both sides (the join would have cast);
+    * a NaN key never matches either.
     */
   def syncAppend(incoming: DataFrame, sink: SheetSink,
       keys: Seq[String] = graft.fred.Schemas.servingKey,
       maxAppendRows: Int = 100000): Long = {
-    val fresh = graft.fred.ops.DedupSync
-      .newRows(incoming, sink.read(incoming.sparkSession), keys)
-      .select(sink.schema.fieldNames.map(col).toSeq: _*)
-    val rows = fresh.limit(maxAppendRows + 1).collect()
+    keys.foreach { k =>
+      val (theirs, ours) = (sink.schema(k).dataType, incoming.schema(k).dataType)
+      require(theirs == ours, s"key column '$k' is ${theirs.simpleString} on the " +
+        s"sheet but ${ours.simpleString} in the incoming frame")
+    }
+    val fresh = incoming.select(sink.schema.fieldNames.map(col).toSeq: _*)
+    val at = keys.map(sink.schema.fieldIndex)
+    val sheetKeys = incoming.sparkSession.sparkContext
+      .broadcast(sink.rows.iterator.map(r => at.map(r.get)).toSet)
+    val rows = try fresh.rdd.mapPartitions { it =>
+      val seen = sheetKeys.value
+      it.filter { r =>
+        val k = at.map(r.get)
+        k.contains(null) || !seen(k)
+      }.take(maxAppendRows + 1)
+    }.collect() finally sheetKeys.destroy()
     require(rows.length <= maxAppendRows,
       s"refusing to append > $maxAppendRows rows to a sheet sink — " +
         "a sheet is a bounded serving surface, not a lake")

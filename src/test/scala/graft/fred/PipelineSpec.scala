@@ -2,6 +2,7 @@ package graft.fred
 
 import java.time.LocalDate
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.fred.io.{DdlOps, FredSource, LakeIO}
@@ -142,11 +143,10 @@ class PipelineSpec extends SparkSpec {
     assert(!new java.io.File(s"$tmp/raw_data").exists(), "month 1 must not have been written")
   }
 
-  test("extract: a whole window costs exactly one Spark job") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-extract-jobs").toString
-    val pipe = new Pipeline(spark, new FredSource.Fixture(window), tmp)
+  /** The Spark jobs `body` starts, counted through a job group. */
+  private def sparkJobs(body: => Unit): Int = {
     val sc = spark.sparkContext
-    val group = s"extract-jobs-${System.nanoTime()}"
+    val group = s"job-count-${System.nanoTime()}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -155,14 +155,22 @@ class PipelineSpec extends SparkSpec {
     }
     sc.addSparkListener(l)
     try {
-      sc.setJobGroup(group, "extract job count")
-      try pipe.extract("DGS10", LocalDate.parse("2024-01-01"), LocalDate.parse("2024-03-31"))
-      finally sc.clearJobGroup()
+      sc.setJobGroup(group, "job count")
+      try body finally sc.clearJobGroup()
       // the listener bus is asynchronous: drain it before counting, so a
       // late second job cannot go unseen
       org.apache.spark.GraftListenerFlush.flush(sc)
-      assert(jobs.get == 1, s"extract ran ${jobs.get} Spark jobs")
+      jobs.get
     } finally sc.removeSparkListener(l)
+  }
+
+  test("extract: a whole window costs exactly one Spark job") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-extract-jobs").toString
+    val pipe = new Pipeline(spark, new FredSource.Fixture(window), tmp)
+    val jobs = sparkJobs {
+      pipe.extract("DGS10", LocalDate.parse("2024-01-01"), LocalDate.parse("2024-03-31"))
+    }
+    assert(jobs == 1, s"extract ran $jobs Spark jobs")
   }
 
   test("typed silver boundary: Dataset[SilverObservation] round-trips the lake") {
@@ -284,6 +292,63 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  private val goldCols = Seq("indicator", "observation_year", "observation_month", "value")
+
+  test("SheetSink.syncAppend: one Spark job over a multi-split gold scan and a non-empty sheet") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-sheet-jobs").toString + "/gold"
+    (1 to 6).map(m => ("DGS10", 2024, m, 4.0 + m)).toDF(goldCols: _*)
+      .repartition(2).write.parquet(tmp)
+    val gold = spark.read.parquet(tmp)
+    assert(gold.rdd.getNumPartitions >= 2, "the gold scan must have several splits")
+    val sheet = new graft.fred.io.SheetSink.InMemory(gold.schema)
+    sheet.append((1 to 3).map(m => Row("DGS10", 2024, m, 4.0 + m)))
+    var appended = -1L
+    val jobs = sparkJobs { appended = graft.fred.io.SheetSink.syncAppend(gold, sheet) }
+    assert(jobs == 1, s"syncAppend ran $jobs Spark jobs")
+    assert(appended == 3L)
+    assert(sheet.rows.map(_.getInt(2)).sorted == (1 to 6))
+  }
+
+  test("SheetSink.syncAppend: the bound holds over all partitions, not per partition") {
+    val rows = (1 to 6).map(m => Row("DGS10", 2024, m, 4.0))
+    val gold = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+      Seq(("DGS10", 2024, 1, 4.0)).toDF(goldCols: _*).schema)
+    // two fresh rows per partition, each partition under the bound
+    val sheet = new graft.fred.io.SheetSink.InMemory(gold.schema)
+    val e = intercept[IllegalArgumentException] {
+      graft.fred.io.SheetSink.syncAppend(gold, sheet, maxAppendRows = 5)
+    }
+    assert(e.getMessage.contains("> 5 rows"), e.getMessage)
+    assert(sheet.size == 0, "a refused sync appends nothing")
+    assert(graft.fred.io.SheetSink.syncAppend(gold, sheet, maxAppendRows = 6) == 6L)
+  }
+
+  test("SheetSink.syncAppend: keys match DedupSync.newRows' anti join; a key type mismatch fails") {
+    import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+    val schema = StructType(Seq(StructField("indicator", StringType),
+      StructField("observation_year", IntegerType), StructField("observation_month", IntegerType)))
+    def frame(rows: Row*) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    val onSheet = Seq(Row("DGS10", 2024, 1), Row("DGS10", 2024, null), Row(null, 2024, 2))
+    val incoming = frame(Row("DGS10", 2024, 1), Row("DGS10", 2024, null),
+      Row(null, 2024, 2), Row("DGS10", 2024, 3))
+    val sheet = new graft.fred.io.SheetSink.InMemory(schema)
+    sheet.append(onSheet)
+    val expected = graft.fred.ops.DedupSync.newRows(incoming, frame(onSheet: _*))
+      .collect().toSet
+    // a key with a null component never matches, on either side
+    assert(expected == Set(Row("DGS10", 2024, null), Row(null, 2024, 2), Row("DGS10", 2024, 3)))
+    assert(graft.fred.io.SheetSink.syncAppend(incoming, sheet) == 3L)
+    assert(sheet.rows.drop(onSheet.size).toSet == expected)
+    // Int on the sheet, Long incoming: a Set lookup would never match
+    val e = intercept[IllegalArgumentException] {
+      graft.fred.io.SheetSink.syncAppend(
+        incoming.withColumn("observation_month", col("observation_month").cast("long")), sheet)
+    }
+    assert(e.getMessage.contains(
+      "'observation_month' is int on the sheet but bigint in the incoming frame"), e.getMessage)
+  }
+
   test("DdlOps: create/rename/add/truncate against the session catalog") {
     val t = s"graft_ddl_test_${System.nanoTime()}"
     DdlOps.createTable(spark, t, Seq(
@@ -372,6 +437,73 @@ class PipelineSpec extends SparkSpec {
     val gold3 = spark.read.parquet(s"$tmp/aggregated_data")
       .select("indicator").as[String].collect().toSet
     assert(gold3 == Set("UNRATE"), s"got $gold3")
+  }
+
+  test("propagateDelete: a crash at any delete of a leaf erase leaves the month whole or gone") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import scala.jdk.CollectionConverters._
+    import graft.FaultFs
+    val template = Files.createTempDirectory("graft-erase-template").toString
+    new Pipeline(spark, new FredSource.Fixture(window), template)
+      .extract("DGS10", LocalDate.parse("2024-01-01"), LocalDate.parse("2024-03-31"))
+    // split month 1's one bronze file into one file per row
+    val leaf = Paths.get(s"$template/raw_data/indicator=DGS10/observation_year=2024/observation_month=1")
+    val files = Files.list(leaf).iterator().asScala.toSeq
+    val lines = files.filterNot(_.getFileName.toString.startsWith("."))
+      .flatMap(Files.readAllLines(_).asScala)
+    files.foreach(Files.delete)
+    lines.zipWithIndex.foreach { case (l, i) => Files.writeString(leaf.resolve(s"part-$i.json"), l) }
+    assert(lines.size == 3)
+    def copyOfTemplate(): String = {
+      val to = Files.createTempDirectory("graft-erase")
+      val walk = Files.walk(Paths.get(template))
+      try walk.iterator().asScala.foreach { p =>
+        val q = to.resolve(Paths.get(template).relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(q)
+        else Files.copy(p, q, StandardCopyOption.REPLACE_EXISTING)
+      } finally walk.close()
+      to.toString
+    }
+    def month1Rows(root: String): Long = LakeIO.readBronze(spark, s"$root/raw_data")
+      .where(col("observation_month") === 1).count()
+
+    spark.conf.set("fs.file.impl", classOf[FaultFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    try {
+      /** The lake root after `propagateDelete` of month 1 met `fault`. */
+      def eraseWith(fault: String => FaultFs.Fault): (FaultFs.Fault, String) = {
+        val root = copyOfTemplate()
+        val f = fault(new org.apache.hadoop.fs.Path(
+          s"$root/raw_data/indicator=DGS10/observation_year=2024").toUri.getPath)
+        FaultFs.installed = f
+        try new Pipeline(spark, new FredSource.Fixture(window), root, retries = 0)
+          .propagateDelete("DGS10", 2024, 1)
+        catch { case _: Exception if f.tripped => () }
+        finally FaultFs.installed = FaultFs.census("/")
+        (f, root)
+      }
+      val (clean, cleanRoot) = eraseWith(FaultFs.census(_, Set("delete")))
+      assert(month1Rows(cleanRoot) == 0L)
+      val n = clean.count
+      assert(n > 3, s"the leaf erase expands to only $n deletes")
+      val seen = (1 to n).map { k =>
+        val (f, root) = eraseWith(new FaultFs.Fault(Set("delete"), _, k, crash = true))
+        assert(f.tripped, s"delete #$k of $n never ran")
+        val rows = month1Rows(root)
+        assert(rows == 3L || rows == 0L, s"crash at delete #$k of $n left $rows of 3 rows")
+        // a re-run heals the crash and converges: the month gone, no trash
+        new Pipeline(spark, new FredSource.Fixture(window), root, retries = 0)
+          .propagateDelete("DGS10", 2024, 1)
+        assert(month1Rows(root) == 0L)
+        assert(new java.io.File(s"$root/raw_data/indicator=DGS10/observation_year=2024")
+          .list().forall(!_.startsWith(".")), s"crash at delete #$k left trash")
+        rows
+      }.toSet
+      assert(seen == Set(0L, 3L), s"the crash points must fall both before and after the commit: $seen")
+    } finally {
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
+    }
   }
 
   test("jdbcCreateTableSql: reference-shaped serving DDL") {
