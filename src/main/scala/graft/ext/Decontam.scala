@@ -196,8 +196,8 @@ object Decontam {
     * [[SuffixDedup.gramIndex]] schema; extra columns ignored) instead
     * of the bench corpus itself: the INGEST-TIME form (r15 VERDICT
     * #3). The eval suite is frozen, so its gram index is built once
-    * ([[SuffixDedup.updateSavedGramIndex]] or the bucketed
-    * [[SuffixDedup.savedGramIndexBucketed]] form) and every arriving
+    * ([[SuffixDedup.updateSavedGramIndexBucketed]], read back by
+    * [[SuffixDedup.savedGramIndexBucketed]]) and every arriving
     * micro-batch probes it — contamination is flagged at ingest, not
     * at curation time, and the suite is never re-sharded per batch.
     *

@@ -808,10 +808,13 @@ object Dedup {
           .otherwise(lit(0.0)).as("novelty"))
   }
 
+  private val DfIndexPrefix = "graft_df_idx_"
+  private val DfIndexColumns = "g STRING, doc_count BIGINT, batch_id BIGINT"
+
   /** Deterministic session-catalog name for the bucketed df index at
     * `root` (the [[SuffixDedup.gramIndexTableName]] discipline). */
   def dfIndexTableName(root: String): String =
-    SuffixDedup.indexTableName("graft_df_idx_", root)
+    SuffixDedup.indexTableName(DfIndexPrefix, root)
 
   /** Gram-size marker a df-index root carries alongside its data: the
     * state is meaningless under any other `n` (a fold or erasure with
@@ -865,27 +868,8 @@ object Dedup {
     // a crashed compaction swap must heal, never read as a zero-count corpus
     graft.Swap.heal(spark, root)
     SuffixDedup.ensureBucketedTable(spark, root, dfIndexTableName(root),
-      "g STRING, doc_count BIGINT, batch_id BIGINT", buckets)
+      DfIndexColumns, buckets)
   }
-
-  /** The saved df index in path-parquet form (empty-schema frame when
-    * the root holds no data yet — the legacy `buckets = 0` knob;
-    * refuses a bucketed root, heals a crashed compaction swap). */
-  def savedDfIndex(spark: org.apache.spark.sql.SparkSession,
-      root: String): DataFrame =
-    SketchState.readStateOrEmpty(spark, root,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("g",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("doc_count",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("batch_id",
-          org.apache.spark.sql.types.LongType))))
-
-  private def readDfIndex(spark: org.apache.spark.sql.SparkSession,
-      root: String, buckets: Int): DataFrame =
-    if (buckets > 0) savedDfIndexBucketed(spark, root, buckets)
-    else savedDfIndex(spark, root)
 
   /** Fold one micro-batch's doc-frequency contributions into the
     * saved df index at `root`. Counted folds are NOT idempotent under
@@ -901,15 +885,12 @@ object Dedup {
     require(batchId >= 0, "fold batch ids must be >= 0")
     val spark = batch.sparkSession
     validateOrPinGramN(spark, root, n)
-    val idx = readDfIndex(spark, root, buckets)
+    val idx = savedDfIndexBucketed(spark, root, buckets)
     if (!idx.filter(col("batch_id") === batchId).isEmpty) return
     val partial = gramDfIndex(batch, idCol, textCol, n)
       .withColumn("batch_id", lit(batchId))
       .select("g", "doc_count", "batch_id") // insertInto is positional
-    if (buckets > 0)
-      SuffixDedup.bucketAlignedAppend(partial, buckets,
-        dfIndexTableName(root))
-    else partial.write.mode("append").parquet(root)
+    SuffixDedup.bucketAlignedAppend(partial, buckets, dfIndexTableName(root))
   }
 
   /** Right-to-erasure for the saved df index (r16 VERDICT #4): a
@@ -933,15 +914,12 @@ object Dedup {
     val stamp = -1L - eraseId
     val spark = deleted.sparkSession
     validateOrPinGramN(spark, root, n)
-    val idx = readDfIndex(spark, root, buckets)
+    val idx = savedDfIndexBucketed(spark, root, buckets)
     if (!idx.filter(col("batch_id") === stamp).isEmpty) return
     val partial = gramDfIndex(deleted, idCol, textCol, n)
       .select(col("g"), (-col("doc_count")).as("doc_count"),
         lit(stamp).as("batch_id"))
-    if (buckets > 0)
-      SuffixDedup.bucketAlignedAppend(partial, buckets,
-        dfIndexTableName(root))
-    else partial.write.mode("append").parquet(root)
+    SuffixDedup.bucketAlignedAppend(partial, buckets, dfIndexTableName(root))
   }
 
   /** COMPACTION for the saved df index: collapse every partial with
@@ -966,15 +944,16 @@ object Dedup {
     * [[requireProbeAboveDfHorizon]] rejects such probes instead of
     * letting every gram read as absent (falsely novel).
     *
-    * Both forms commit by [[graft.Swap.swap]] (the bucketed form stages
-    * a fully-written BUCKETED sibling, same spec and marker, then
-    * refreshes), so a crash leaves the old or the new state, never a
-    * half-compacted mix a summing reader would misreport. */
+    * Commits through [[SuffixDedup.compactBucketedState]] (a
+    * fully-written BUCKETED sibling, same spec and markers, swapped in
+    * by [[graft.Swap.swap]]), so a crash leaves the old or the new
+    * state, never a half-compacted mix a summing reader would
+    * misreport. */
   def compactSavedDfIndex(spark: org.apache.spark.sql.SparkSession,
       root: String, upToBatchId: Long, buckets: Int = 16): Unit = {
     require(upToBatchId >= 1,
       "upToBatchId must be >= 1 (the compacted stamp is upToBatchId - 1)")
-    val idx = readDfIndex(spark, root, buckets)
+    val idx = savedDfIndexBucketed(spark, root, buckets)
     val compacted = idx.filter(col("batch_id") < upToBatchId)
       .groupBy("g").agg(sum(col("doc_count")).as("doc_count"))
       .filter(col("doc_count") =!= 0)
@@ -1006,30 +985,8 @@ object Dedup {
         new org.apache.hadoop.fs.Path(tmpDir), DfHorizonFile,
         horizon.toString)
     }
-    if (buckets > 0) {
-      val tbl = dfIndexTableName(root)
-      SketchState.swapInState(spark, root) { tmpDir =>
-        val tmpTbl = dfIndexTableName(tmpDir)
-        // a retried compaction after a crash may find the temp table
-        // still registered — dropping it first forces the CREATE
-        // branch, so the fresh temp dir gets its bucket-count marker
-        spark.sql(s"DROP TABLE IF EXISTS $tmpTbl")
-        SuffixDedup.ensureBucketedTable(spark, tmpDir, tmpTbl,
-          "g STRING, doc_count BIGINT, batch_id BIGINT", buckets)
-        // reads the live root table while writing the sibling — the
-        // root only moves after this returns
-        compacted.write.mode("append").insertInto(tmpTbl)
-        carryMarker(tmpDir)
-        // external table: dropping the catalog entry keeps the files
-        spark.sql(s"DROP TABLE IF EXISTS $tmpTbl")
-      }
-      spark.catalog.refreshTable(tbl)
-    } else {
-      SketchState.swapInState(spark, root) { tmpDir =>
-        compacted.write.parquet(tmpDir)
-        carryMarker(tmpDir)
-      }
-    }
+    SuffixDedup.compactBucketedState(spark, root, DfIndexPrefix,
+      DfIndexColumns, buckets, compacted, carryMarker)
   }
 
   /** Marker recording the df index's compaction horizon (the stamp

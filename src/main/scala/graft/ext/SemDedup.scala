@@ -764,7 +764,7 @@ object SemDedup {
     * counted df-index) into one fresh file set per bucket. Exact
     * full-row duplicates — the benign transients a crashed erase can
     * leave — collapse for free. Same swap discipline as
-    * [[Dedup.compactSavedDfIndex]]'s bucketed form: a fully-written
+    * [[SuffixDedup.compactBucketedState]]: a fully-written
     * bucketed sibling (bucket marker re-pinned by the CREATE) renames
     * in under the table's LOCATION, so a crash leaves either the old
     * or the new state, never a mix. Requires quiesced writers (the

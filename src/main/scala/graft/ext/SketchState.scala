@@ -46,15 +46,15 @@ object SketchState {
 
   private val BatchIdFile = "_graft_batch_id"
 
-  /** THE path-form saved-state reader (shared by every path-parquet
-    * index/state root — the gram/fingerprint key indexes, the df
-    * index, the PII counts): heals a crashed swap first, REFUSES a
-    * root carrying the bucketed marker (reading a bucketed layout
-    * through the path form would at best crash and at worst misplan —
-    * use its bucketed table form), and returns an empty frame of
+  /** THE path-form saved-state reader (shared by the path-parquet
+    * state roots — the PII counts and the corpus report's scalars and
+    * langs; the key and df indexes are bucketed tables only): heals a
+    * crashed swap first, REFUSES a root carrying the bucketed marker
+    * (reading a bucketed layout through the path form would at best
+    * crash and at worst misplan — use its bucketed table form), and
+    * returns an empty frame of
     * `schema` when the root holds no DATA files yet (a marker-only
-    * root — e.g. a bucketed first-touch before any fold — must not
-    * crash parquet schema inference). */
+    * root must not crash parquet schema inference). */
   private[graft] def readStateOrEmpty(spark: SparkSession, root: String,
       schema: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.DataFrame = {

@@ -682,8 +682,8 @@ object SuffixDedup {
   /** Distinct `minTokens`-gram relation of a corpus slice, stamped
     * with the micro-batch that FIRST contributed each gram:
     * (g, first_batch_id) — the saved index the incremental screen
-    * probes. Gram strings keep the oracle byte-exact; the production
-    * persistence is the BUCKETED table form
+    * probes. Gram strings keep the oracle byte-exact; the saved form
+    * is the BUCKETED table
     * ([[savedGramIndexBucketed]] / [[updateSavedGramIndexBucketed]]),
     * which co-locates every later probe join with zero Exchange on
     * the index side (the [[Decontam.contaminatedSpans]] trade,
@@ -694,33 +694,6 @@ object SuffixDedup {
       .select(explode(Dedup.slidingGrams(col(textCol), minTokens)).as("g"))
       .distinct()
       .withColumn("first_batch_id", lit(batchId))
-
-  /** Fold a micro-batch's grams into the saved index under `root`:
-    * only grams the index has never seen append (left-anti), so
-    * `first_batch_id` is always the FIRST appearance and a replayed
-    * batch appends nothing — idempotent under at-least-once delivery
-    * with no marker file. The provenance column is what makes the
-    * SCREEN replay-exact: [[duplicatedSpansIncremental]] reads only
-    * rows with `first_batch_id < its own batch id`, so a replayed
-    * batch never sees its own grams as "corpus" even though they are
-    * already in the index. Append-only: a crashed write commits
-    * nothing (the Hadoop committer), and the re-run converges. */
-  def updateSavedGramIndex(root: String, batch: DataFrame, textCol: String,
-      minTokens: Int, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    // the shared path-form reader: heals a mid-erasure-swap crash and
-    // refuses a bucketed root instead of appending plain files under
-    // a CLUSTERED BY layout
-    val saved = SketchState.readStateOrEmpty(spark, root,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("g",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("first_batch_id",
-          org.apache.spark.sql.types.LongType))))
-    gramIndex(batch, textCol, minTokens, batchId)
-      .join(saved, Seq("g"), "left_anti")
-      .write.mode("append").parquet(root)
-  }
 
   /** Deterministic session-catalog name for a bucketed saved-state
     * table at `root` (md5 of the root path — restart-stable,
@@ -800,8 +773,9 @@ object SuffixDedup {
     * written with, BEFORE the catalog re-adopts the location; pin the
     * count in a [[BucketsFile]] marker for every later re-adoption.
     * Fails loudly on: a marker recording a different count; part
-    * files with no bucket id in their names (a PATH-form index — the
-    * bucketed table form must never adopt one); a legacy pre-marker
+    * files with no bucket id in their names (a root written in the
+    * removed path-parquet form — it must be rebuilt, never adopted,
+    * and the message says how); a legacy pre-marker
     * root whose file ids do not evidence exactly `buckets` (top
     * bucket populated) — a sparse legacy root must have its true
     * count confirmed and the marker written by hand, because a wrong
@@ -829,8 +803,13 @@ object SuffixDedup {
         val ids = parts.collect { case BucketIdInName(id) => id.toInt }
         require(ids.length == parts.length,
           s"$root holds NON-bucketed part files — it is a path-form " +
-            "index; read it with spark.read.parquet, not the bucketed " +
-            "table form")
+            "index, a layout that is no longer read or written. " +
+            "Rebuild it as a bucketed table at a new root: append " +
+            "spark.read.parquet(<this root>) into the table that " +
+            "savedGramIndexBucketed (Dedup.savedDfIndexBucketed for a " +
+            "df index) registers at the new root, copy any " +
+            "_graft_gram_n / _graft_df_horizon marker file across, and " +
+            "use the new root (README, \"Saved-index layout\")")
         // legacy pre-marker root: adopting with a count the file ids
         // do not positively evidence (top bucket populated) risks a
         // silent modulo mismatch in BOTH directions — refuse and ask
@@ -985,13 +964,20 @@ object SuffixDedup {
       savedGramIndexBucketed(spark, root, buckets)
         .select("g", "first_batch_id").dropDuplicates())
 
-  /** [[updateSavedGramIndexBucketed]] for a CALLER-SUPPLIED key frame
-    * (column `g` — e.g. the curation composite's per-batch document
-    * fingerprints): the never-seen keys, stamped with this batch,
-    * append THROUGH the catalog so the new files land bucketed by the
-    * same spec and later probes keep their zero-Exchange plan. Same
-    * idempotence argument as the path form ([[updateSavedGramIndex]]):
-    * a replayed batch's keys all anti-join away. */
+  /** Fold a caller-supplied key frame (column `g` — e.g. the curation
+    * composite's per-batch document fingerprints) into the saved key
+    * index under `root`: only keys the index has never seen append
+    * (left-anti), stamped with this batch, so `first_batch_id` is
+    * always the FIRST appearance and a replayed batch appends nothing —
+    * idempotent under at-least-once delivery with no marker file. The
+    * provenance column is what makes the SCREEN replay-exact:
+    * [[duplicatedSpansIncremental]] reads only rows with
+    * `first_batch_id < its own batch id`, so a replayed batch never
+    * sees its own keys as "corpus" even though they are already in the
+    * index. New rows append THROUGH the catalog, so the files land
+    * bucketed by the same spec and later probes keep their
+    * zero-Exchange plan. Append-only: a crashed write commits nothing
+    * (the Hadoop committer), and the re-run converges. */
   def updateSavedKeyIndexBucketed(root: String, keys: DataFrame,
       batchId: Long, buckets: Int = 16): Unit = {
     val spark = keys.sparkSession
@@ -1004,8 +990,9 @@ object SuffixDedup {
       buckets, gramIndexTableName(root))
   }
 
-  /** [[updateSavedGramIndex]] against the bucketed table form: the
-    * batch's `minTokens`-grams through [[updateSavedKeyIndexBucketed]]. */
+  /** Fold a micro-batch's `minTokens`-grams into the saved gram index
+    * under `root` through [[updateSavedKeyIndexBucketed]] (first
+    * appearance wins; a replayed batch appends nothing). */
   def updateSavedGramIndexBucketed(root: String, batch: DataFrame,
       textCol: String, minTokens: Int, batchId: Long,
       buckets: Int = 16): Unit =
@@ -1085,25 +1072,23 @@ object SuffixDedup {
     * the right default when scanning the surviving lake is too
     * expensive; pass `keep` for the exact form.
     *
-    *   - `buckets == 0` (path-parquet index): one distributed
-    *     anti-join rewrite, committed by [[graft.Swap.swap]].
-    *   - `buckets > 0` (bucketed table, [[savedGramIndexBucketed]]):
-    *     ONLY the bucket files that contain a deleted key rewrite —
-    *     untouched bucket files stay byte-identical (at 100 TB the
-    *     deleted doc set touches a handful of buckets, never the
-    *     index). Crash-convergent instead of atomic: kept rows from
-    *     affected files re-append FIRST (a transient duplicate key is
-    *     benign — every reader is a set-membership probe or an
-    *     anti-join-append), old files drop last, and a re-run after
-    *     any crash completes the remainder. CONCURRENT readers must
-    *     quiesce for the bucketed erase (r16 ADVICE #3): a stream or
-    *     probe holding a file listing cached before the erase can hit
-    *     `FileNotFoundException` on the dropped originals — pause the
-    *     streams (the transient-duplicate argument covers semantics,
-    *     not listings), or run readers with
-    *     `spark.sql.files.ignoreMissingFiles=true` for the erasure
-    *     window (safe here: a missing file's rows were either deleted
-    *     keys or re-appended kept copies).
+    * ONLY the bucket files of the [[savedGramIndexBucketed]] table
+    * that contain a deleted key rewrite — untouched bucket files stay
+    * byte-identical (at 100 TB the deleted doc set touches a handful
+    * of buckets, never the index). Crash-convergent instead of atomic:
+    * kept rows from affected files re-append FIRST (a transient
+    * duplicate key is benign — every reader is a set-membership probe
+    * or an anti-join-append), old files drop last, and a re-run after
+    * any crash completes the remainder. CONCURRENT readers must
+    * quiesce for the erase (r16 ADVICE #3): a stream or probe holding
+    * a file listing cached before the erase can hit
+    * `FileNotFoundException` on the dropped originals — pause the
+    * streams (the transient-duplicate argument covers semantics, not
+    * listings), or run readers with
+    * `spark.sql.files.ignoreMissingFiles=true` for the erasure window
+    * (safe here: a missing file's rows were either deleted keys or
+    * re-appended kept copies). A root that does not exist (after
+    * healing a crashed swap) is left uncreated.
     *
     * For the saved SKETCH states ([[SketchState]] HLL/CMS/Bloom, the
     * Misra–Gries and GK summaries) a per-key delete is
@@ -1113,81 +1098,64 @@ object SuffixDedup {
     * the surviving lake after [[SketchState]] state is reset. */
   def deleteKeysFromSavedIndex(spark: org.apache.spark.sql.SparkSession,
       root: String, keys: DataFrame, keep: Option[DataFrame] = None,
-      buckets: Int = 0): Unit = {
+      buckets: Int = 16): Unit = {
+    // heal BEFORE the existence check (a root whose aside holds the
+    // pre-delete state must not report success with nothing erased),
+    // and return before the table read below, which would create the
+    // table and pin a bucket marker at a root nobody built
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
+    graft.Swap.heal(fs, rootPath)
+    if (!fs.exists(rootPath)) return
     val toDrop0 = keys.select(col("g")).distinct()
     val toDrop = keep match {
       case Some(k) => toDrop0.join(k.select(col("g")).distinct(),
         Seq("g"), "left_anti")
       case None => toDrop0
     }
-    if (buckets > 0) {
-      val tbl = gramIndexTableName(root)
-      val idx = savedGramIndexBucketed(spark, root, buckets)
-      // tag files BEFORE the join: input_file_name() evaluated above
-      // a sort-merge semi join reads whatever file the task's sorter
-      // drained LAST, not the row's source — the column must
-      // materialize in a project directly over the scan
-      val tagged = idx.withColumn("__f", input_file_name())
-      val affected = tagged.join(toDrop, Seq("g"), "left_semi")
-        .select("__f").distinct()
-        .collect().map(_.getString(0)) // bounded by the bucket count
-      if (affected.isEmpty) return
-      // kept = affected files' surviving rows, MINUS rows already
-      // present outside the affected files: in a healthy index every
-      // key exists once (the anti-join append), so this second
-      // anti-join drops nothing — but after a crash between a prior
-      // run's append and its file deletions, it is exactly what makes
-      // the re-run converge to single copies instead of compounding
-      // duplicates per crash
-      val kept = tagged
-        .filter(col("__f").isInCollection(affected.toSeq))
-        .join(toDrop, Seq("g"), "left_anti")
-        .join(tagged.filter(!col("__f").isInCollection(affected.toSeq))
-          .select("g"), Seq("g"), "left_anti")
-        .select("g", "first_batch_id")
-      // stage through a sibling temp dir: inserting rows read from
-      // the table being inserted into is self-referential
-      val tmp = SketchState.sibling(root, ".erase_tmp")
-      val fs = tmp.getFileSystem(spark.sessionState.newHadoopConf())
-      fs.delete(tmp, true)
-      kept.write.parquet(tmp.toString)
-      spark.read.parquet(tmp.toString)
-        .write.mode("append").insertInto(tbl)
-      // drop the cached file listing BEFORE the deletes as well: a
-      // same-session reader planning a scan between a delete and the
-      // final refresh would otherwise hold a listing naming files
-      // about to vanish (r16 ADVICE #3). This narrows the window; it
-      // cannot close it for CONCURRENT readers — see the quiescence
-      // note in the method scaladoc.
-      spark.catalog.refreshTable(tbl)
-      affected.foreach { f =>
-        fs.delete(new org.apache.hadoop.fs.Path(new java.net.URI(f)), false)
-      }
-      fs.delete(tmp, true)
-      spark.catalog.refreshTable(tbl)
-    } else {
-      // heal BEFORE the existence check: a root whose aside holds the
-      // pre-delete state must not report success with nothing erased
-      graft.Swap.heal(spark, root)
-      val path = new org.apache.hadoop.fs.Path(root)
-      val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(path)) return
-      // a bucketed layout must not be rewritten by the path form: the
-      // swap would land plain part-files under a LOCATION the catalog
-      // still declares CLUSTERED BY, and the next bucketed scan dies
-      // with "Invalid bucket file" — fail at erase time instead
-      val bucketedFile = fs.listStatus(path).exists(
-        s => s.getPath.getName.matches("part-.*_\\d{5}\\.c\\d{3}.*")) ||
-        fs.exists(new org.apache.hadoop.fs.Path(path, BucketsFile))
-      require(!bucketedFile,
-        s"$root holds a BUCKETED index — pass its bucket count " +
-          "(buckets > 0) so only the affected bucket files rewrite")
-      SketchState.swapInState(spark, root) { tmpDir =>
-        spark.read.parquet(root)
-          .join(toDrop, Seq("g"), "left_anti")
-          .write.parquet(tmpDir)
-      }
+    val tbl = gramIndexTableName(root)
+    val idx = savedGramIndexBucketed(spark, root, buckets)
+    // tag files BEFORE the join: input_file_name() evaluated above
+    // a sort-merge semi join reads whatever file the task's sorter
+    // drained LAST, not the row's source — the column must
+    // materialize in a project directly over the scan
+    val tagged = idx.withColumn("__f", input_file_name())
+    val affected = tagged.join(toDrop, Seq("g"), "left_semi")
+      .select("__f").distinct()
+      .collect().map(_.getString(0)) // bounded by the bucket count
+    if (affected.isEmpty) return
+    // kept = affected files' surviving rows, MINUS rows already
+    // present outside the affected files: in a healthy index every
+    // key exists once (the anti-join append), so this second
+    // anti-join drops nothing — but after a crash between a prior
+    // run's append and its file deletions, it is exactly what makes
+    // the re-run converge to single copies instead of compounding
+    // duplicates per crash
+    val kept = tagged
+      .filter(col("__f").isInCollection(affected.toSeq))
+      .join(toDrop, Seq("g"), "left_anti")
+      .join(tagged.filter(!col("__f").isInCollection(affected.toSeq))
+        .select("g"), Seq("g"), "left_anti")
+      .select("g", "first_batch_id")
+    // stage through a sibling temp dir: inserting rows read from
+    // the table being inserted into is self-referential
+    val tmp = SketchState.sibling(root, ".erase_tmp")
+    fs.delete(tmp, true)
+    kept.write.parquet(tmp.toString)
+    spark.read.parquet(tmp.toString)
+      .write.mode("append").insertInto(tbl)
+    // drop the cached file listing BEFORE the deletes as well: a
+    // same-session reader planning a scan between a delete and the
+    // final refresh would otherwise hold a listing naming files
+    // about to vanish (r16 ADVICE #3). This narrows the window; it
+    // cannot close it for CONCURRENT readers — see the quiescence
+    // note in the method scaladoc.
+    spark.catalog.refreshTable(tbl)
+    affected.foreach { f =>
+      fs.delete(new org.apache.hadoop.fs.Path(new java.net.URI(f)), false)
     }
+    fs.delete(tmp, true)
+    spark.catalog.refreshTable(tbl)
   }
 
   // --------------------------------- cross-corpus (benchmark) screen

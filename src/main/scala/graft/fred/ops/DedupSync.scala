@@ -10,16 +10,15 @@ import org.apache.spark.sql.functions.broadcast
   * (`load_fred_data_to_google.py:108-119`); the scalable equivalent is a
   * LEFT ANTI join on the key columns. The sink side (existing keys) is
   * small relative to the lake — broadcast it so the anti-join is
-  * shuffle-free on the (large) incoming side.
+  * shuffle-free on the (large) incoming side. Duplicate keys on the
+  * sink side cannot change an anti join's result, so they are not
+  * collapsed first (that would cost a shuffle).
   */
 object DedupSync {
 
   /** Rows of `incoming` whose key is absent from `existing`. */
   def newRows(incoming: DataFrame, existing: DataFrame,
-      keys: Seq[String] = graft.fred.Schemas.servingKey,
-      broadcastExisting: Boolean = true): DataFrame = {
-    val existingKeys = existing.select(keys.head, keys.tail: _*).distinct()
-    val right = if (broadcastExisting) broadcast(existingKeys) else existingKeys
-    incoming.join(right, keys, "left_anti")
-  }
+      keys: Seq[String] = graft.fred.Schemas.servingKey): DataFrame =
+    incoming.join(broadcast(existing.select(keys.head, keys.tail: _*)),
+      keys, "left_anti")
 }

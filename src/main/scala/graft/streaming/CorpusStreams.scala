@@ -163,15 +163,14 @@ object CorpusStreams {
     * overwrites idempotently, and the index append anti-joins to a
     * no-op — all three legs of at-least-once delivery converge.
     *
-    * The saved index defaults to a BUCKETED table
+    * The saved index is a BUCKETED table
     * ([[graft.ext.SuffixDedup.savedGramIndexBucketed]], r15 VERDICT
     * #4): the per-batch probe and the anti-join append both scan the
     * accumulated index in place — zero Exchange on the index side,
     * the production shape once the index outgrows a shuffle (the
     * index is the biggest state in the system at 100 TB; its bucket
     * count is pinned at the root and a mismatched re-adoption fails
-    * loudly). `indexBuckets = 0` is the explicit legacy knob for the
-    * plain path-parquet index. */
+    * loudly). */
   def substringScreenStream(docs: DataFrame, indexRoot: String,
       outRoot: String, minTokens: Int, idCol: String = "doc_id",
       textCol: String = "text", indexBuckets: Int = 16)
@@ -180,19 +179,12 @@ object CorpusStreams {
       (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
         val sd = graft.ext.SuffixDedup
-        val index =
-          if (indexBuckets > 0) sd.savedGramIndexBucketed(spark, indexRoot,
-            indexBuckets)
-          else readIndex(spark, indexRoot)
+        val index = sd.savedGramIndexBucketed(spark, indexRoot, indexBuckets)
         val spans = sd.duplicatedSpansIncremental(
           batch.toDF(), index, idCol, textCol, minTokens, batchId)
         writeBatchPartition(spans, batchId, outRoot)
-        if (indexBuckets > 0)
-          sd.updateSavedGramIndexBucketed(indexRoot, batch.toDF(), textCol,
-            minTokens, batchId, indexBuckets)
-        else
-          sd.updateSavedGramIndex(indexRoot, batch.toDF(), textCol,
-            minTokens, batchId)
+        sd.updateSavedGramIndexBucketed(indexRoot, batch.toDF(), textCol,
+          minTokens, batchId, indexBuckets)
     }
 
   /** Streaming BENCHMARK-decontamination screen (r15 VERDICT #3 —
@@ -201,8 +193,8 @@ object CorpusStreams {
     * the EVAL SUITE lands under `outRoot` (partitioned by batch_id).
     * The suite is frozen, so its gram index at `benchIndexRoot` is
     * built ONCE before the stream starts
-    * ([[graft.ext.SuffixDedup.updateSavedGramIndex]], or the bucketed
-    * form when `indexBuckets > 0`) and never updated by batches —
+    * ([[graft.ext.SuffixDedup.updateSavedGramIndexBucketed]]) and
+    * never updated by batches —
     * unlike [[substringScreenStream]] there is no fold-back step, so
     * replay-exactness is trivial: the per-batch output is a pure
     * function of (batch, frozen index) and the partition overwrite is
@@ -238,13 +230,10 @@ object CorpusStreams {
     require(rootPath.getFileSystem(spark.sessionState.newHadoopConf())
         .exists(rootPath),
       s"bench gram index not found at $benchIndexRoot — build it once " +
-        "from the eval suite (updateSavedGramIndex / " +
-        "updateSavedGramIndexBucketed) before starting the screen")
-    val index =
-      if (indexBuckets > 0)
-        graft.ext.SuffixDedup.savedGramIndexBucketed(spark, benchIndexRoot,
-          indexBuckets)
-      else readIndex(spark, benchIndexRoot)
+        "from the eval suite (updateSavedGramIndexBucketed) before " +
+        "starting the screen")
+    val index = graft.ext.SuffixDedup.savedGramIndexBucketed(spark,
+      benchIndexRoot, indexBuckets)
     writeBatchPartition(
       graft.ext.Decontam.contaminatedSpansFromIndex(batch, index, idCol,
         textCol, minTokens),
@@ -278,7 +267,7 @@ object CorpusStreams {
     * its own contributions), index appends anti-join to no-ops, and
     * the per-batch output partition overwrites idempotently.
     *
-    * BOTH saved indexes default to BUCKETED tables
+    * BOTH saved indexes are BUCKETED tables
     * ([[graft.ext.SuffixDedup.savedGramIndexBucketed]] — the
     * fingerprint index shares the (g, first_batch_id) key-index
     * machinery): the fingerprint anti-probe, the gram-index probe,
@@ -287,9 +276,7 @@ object CorpusStreams {
     * composite's state is the biggest frame in the system and must
     * never re-shuffle per micro-batch (r16 VERDICT #1). The bucket
     * count is pinned at each root; a mismatched re-adoption fails
-    * loudly. `indexBuckets = 0` is the explicit legacy knob for
-    * path-parquet state. [[curateBatch]] is the testable per-batch
-    * body. */
+    * loudly. [[curateBatch]] is the testable per-batch body. */
   def curateStream(docs: DataFrame, fpRoot: String, gramRoot: String,
       outRoot: String, minWords: Int = 50, minTokens: Int = 5,
       minKeepTokens: Int = 30, idCol: String = "doc_id",
@@ -331,11 +318,9 @@ object CorpusStreams {
     val spark = batch.sparkSession
     val sd = graft.ext.SuffixDedup
     def index(root: String): DataFrame =
-      if (indexBuckets > 0) sd.savedGramIndexBucketed(spark, root,
-        indexBuckets)
-      else readIndex(spark, root)
+      sd.savedGramIndexBucketed(spark, root, indexBuckets)
     // gate → within-batch dedup → cross-batch anti-probe of the saved
-    // fingerprint index (in place when bucketed)
+    // fingerprint index (in place)
     val deduped = curateDedupStage(batch, index(fpRoot), batchId,
         minWords, idCol, textCol)
       .localCheckpoint() // feeds spans, the output, and both index folds
@@ -347,21 +332,13 @@ object CorpusStreams {
       applied.filter(col("n_tokens") - col("n_removed") >= minKeepTokens),
       batchId, outRoot)
     // fold the batch into both saved indexes (first-appearance ids;
-    // anti-join append — replay-idempotent; bucketed appends land
-    // through the catalog so the layout and the zero-Exchange probe
-    // plan survive)
-    if (indexBuckets > 0) {
-      sd.updateSavedKeyIndexBucketed(fpRoot,
-        deduped.select(col("__fp").as("g")), batchId, indexBuckets)
-      sd.updateSavedGramIndexBucketed(gramRoot,
-        deduped.select(col(idCol), col(textCol)), textCol, minTokens,
-        batchId, indexBuckets)
-    } else {
-      appendNewKeys(fpRoot, deduped.select(col("__fp").as("g")), batchId)
-      sd.updateSavedGramIndex(gramRoot,
-        deduped.select(col(idCol), col(textCol)), textCol, minTokens,
-        batchId)
-    }
+    // anti-join append — replay-idempotent; appends land through the
+    // catalog so the layout and the zero-Exchange probe plan survive)
+    sd.updateSavedKeyIndexBucketed(fpRoot,
+      deduped.select(col("__fp").as("g")), batchId, indexBuckets)
+    sd.updateSavedGramIndexBucketed(gramRoot,
+      deduped.select(col(idCol), col(textCol)), textCol, minTokens,
+      batchId, indexBuckets)
   }
 
   /** Streaming SELF-ACCUMULATING near-dup screen: each micro-batch is
@@ -510,10 +487,8 @@ object CorpusStreams {
     // horizon (a checkpoint reset against a compacted state): the
     // probe would see zero partials and report everything novel
     graft.ext.Dedup.requireProbeAboveDfHorizon(spark, dfRoot, batchId)
-    val idx =
-      if (indexBuckets > 0)
-        graft.ext.Dedup.savedDfIndexBucketed(spark, dfRoot, indexBuckets)
-      else graft.ext.Dedup.savedDfIndex(spark, dfRoot)
+    val idx = graft.ext.Dedup.savedDfIndexBucketed(spark, dfRoot,
+      indexBuckets)
     writeBatchPartition(
       graft.ext.Dedup.gramNoveltyIncremental(batch, idx, idCol, textCol,
         n, batchId),
@@ -562,10 +537,10 @@ object CorpusStreams {
     * are no longer "seen"), while a copy of a SURVIVOR's text still
     * dedups away.
     *
-    * `fpBuckets`/`gramBuckets` must match the layout the composite
-    * wrote (both default to the [[curateStream]] bucketed default;
-    * pass 0 for legacy path-parquet state) — a mismatch fails loudly
-    * via the pinned bucket-count marker, never silently half-erases.
+    * `fpBuckets`/`gramBuckets` must match the bucket counts the
+    * composite wrote (both default to the [[curateStream]] default) —
+    * a mismatch fails loudly via the pinned bucket-count marker, never
+    * silently half-erases.
     * A [[nearDupScreenStream]] state root erases through
     * [[graft.ext.Dedup.deleteDocsFromSavedNearDupState]] (doc-keyed
     * rows — exact with no survivor scan, naturally idempotent).
@@ -602,34 +577,6 @@ object CorpusStreams {
       graft.ext.Dedup.deleteDocsFromSavedDfIndex(root, deleted, idCol,
         textCol, dfN, eraseId, dfBuckets)
     }
-  }
-
-  /** Saved (g, first_batch_id) key index read — empty-schema frame
-    * when the root holds no data yet. The shared
-    * [[graft.ext.SketchState.readStateOrEmpty]] reader: heals a crash
-    * mid erasure-swap (a root missing because a
-    * [[graft.ext.SuffixDedup.deleteKeysFromSavedIndex]] rewrite died
-    * between its renames must restore, never read as an EMPTY corpus)
-    * and REFUSES a bucketed root instead of misreading it. */
-  private def readIndex(spark: org.apache.spark.sql.SparkSession,
-      root: String): DataFrame =
-    graft.ext.SketchState.readStateOrEmpty(spark, root,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("g",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("first_batch_id",
-          org.apache.spark.sql.types.LongType))))
-
-  /** Append keys the index has never seen, stamped with this batch —
-    * the [[graft.ext.SuffixDedup.updateSavedGramIndex]] discipline for
-    * a caller-supplied key frame (column `g`). */
-  private def appendNewKeys(root: String, keys: DataFrame,
-      batchId: Long): Unit = {
-    val spark = keys.sparkSession
-    val fresh = keys.distinct()
-      .withColumn("first_batch_id", lit(batchId))
-      .join(readIndex(spark, root), Seq("g"), "left_anti")
-    fresh.write.mode("append").parquet(root)
   }
 
   def dedupExactStream(docs: DataFrame, idCol: String = "doc_id",

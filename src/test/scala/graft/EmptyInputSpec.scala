@@ -324,25 +324,32 @@ class EmptyInputSpec extends SparkSpec {
       .cleanSpansFromIndex(someDocs, emptyIndex, "doc_id", "text", 5)
     assert(app.count() == 1L &&
       app.filter(col("n_removed") === 0).count() == 1L)
-    // erasure: empty key frame is a no-op; a nonexistent path root
-    // returns without error
+    // erasure: empty key frame is a no-op; a nonexistent root returns
+    // without error and is not created (no table, no bucket marker)
     val tmp = java.nio.file.Files
       .createTempDirectory("graft_empty_erase").toString
     graft.ext.SuffixDedup.deleteKeysFromSavedIndex(spark,
-      tmp + "/missing", emptyIndex.select("g"))
-    graft.ext.SuffixDedup.updateSavedGramIndex(tmp + "/idx", someDocs,
-      "text", 5, batchId = 0L)
+      tmp + "/missing", idx.select("g"))
+    assert(!new java.io.File(tmp + "/missing").exists(),
+      "erasing from a missing root must not create it")
+    assert(!spark.catalog.tableExists(
+      graft.ext.SuffixDedup.gramIndexTableName(tmp + "/missing")))
+    graft.ext.SuffixDedup.updateSavedGramIndexBucketed(tmp + "/idx",
+      someDocs, "text", 5, batchId = 0L)
     graft.ext.SuffixDedup.deleteKeysFromSavedIndex(spark,
       tmp + "/idx", emptyIndex.select("g"))
-    assert(spark.read.parquet(tmp + "/idx").count() == 2L)
+    assert(graft.ext.SuffixDedup.savedGramIndexBucketed(spark, tmp + "/idx")
+      .count() == 2L)
     // bench screen batch: an EMPTY micro-batch against a built frozen
     // index completes without crash and lands no data files (a later
     // non-empty batch establishes the readable root, as in streaming)
     graft.streaming.CorpusStreams.benchScreenBatch(docs, 0L,
-      tmp + "/idx", tmp + "/out", minTokens = 5, indexBuckets = 0)
+      tmp + "/idx", tmp + "/out", minTokens = 5)
     val outF = new java.io.File(tmp + "/out")
     assert(!outF.exists() || !outF.listFiles().exists(f =>
       f.isDirectory || f.getName.endsWith(".parquet")),
       "empty batch must write no data files")
+    spark.sql("DROP TABLE IF EXISTS " +
+      graft.ext.SuffixDedup.gramIndexTableName(tmp + "/idx"))
   }
 }

@@ -188,75 +188,81 @@ class DfIndexSpec extends SparkSpec {
     val tmp = java.nio.file.Files
       .createTempDirectory("graft_df_guard").toString
     val dfRoot = tmp + "/dfidx"
-    Dedup.updateSavedDfIndex(dfRoot, corpus.toDF("doc_id", "text"),
-      "doc_id", "text", n = 5, batchId = 0L, buckets = 0)
-    // fold and erasure with the wrong n both refuse
-    val foldErr = intercept[IllegalArgumentException] {
-      Dedup.updateSavedDfIndex(dfRoot, batch.toDF("doc_id", "text"),
-        "doc_id", "text", n = 7, batchId = 1L, buckets = 0)
-    }
-    assert(foldErr.getMessage.contains("built with n=5"))
-    val eraseErr = intercept[IllegalArgumentException] {
-      Dedup.deleteDocsFromSavedDfIndex(dfRoot,
-        corpus.take(1).toDF("doc_id", "text"), "doc_id", "text", n = 7,
-        eraseId = 0L, buckets = 0)
-    }
-    assert(eraseErr.getMessage.contains("built with n=5"))
-    // the PROBE validates too, BEFORE the wrong report lands on disk
-    val outRoot = tmp + "/out"
-    val probeErr = intercept[IllegalArgumentException] {
-      graft.streaming.CorpusStreams.docNoveltyBatch(
-        batch.toDF("doc_id", "text"), 1L, dfRoot, outRoot, n = 7,
-        indexBuckets = 0)
-    }
-    assert(probeErr.getMessage.contains("built with n=5"))
-    assert(!new java.io.File(outRoot).exists(),
-      "a mismatched-n probe must not land an all-novel partition")
-    // a legacy data-bearing root with NO marker refuses instead of
-    // pinning the caller's unverified n over existing counts
-    val legacyRoot = tmp + "/legacy"
-    spark.read.parquet(dfRoot).write.parquet(legacyRoot)
-    val legacyErr = intercept[IllegalArgumentException] {
-      Dedup.updateSavedDfIndex(legacyRoot, batch.toDF("doc_id", "text"),
-        "doc_id", "text", n = 5, batchId = 1L, buckets = 0)
-    }
-    assert(legacyErr.getMessage.contains("predates the gram-size marker"))
-    // the pinned marker itself is immutable
-    val path = new org.apache.hadoop.fs.Path(dfRoot)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val overwriteErr = intercept[IllegalArgumentException] {
-      SuffixDedup.writeMarkerAtomic(fs, path, "_graft_gram_n", "9")
-    }
-    assert(overwriteErr.getMessage.contains("immutable"))
+    try {
+      Dedup.updateSavedDfIndex(dfRoot, corpus.toDF("doc_id", "text"),
+        "doc_id", "text", n = 5, batchId = 0L)
+      // fold and erasure with the wrong n both refuse
+      val foldErr = intercept[IllegalArgumentException] {
+        Dedup.updateSavedDfIndex(dfRoot, batch.toDF("doc_id", "text"),
+          "doc_id", "text", n = 7, batchId = 1L)
+      }
+      assert(foldErr.getMessage.contains("built with n=5"))
+      val eraseErr = intercept[IllegalArgumentException] {
+        Dedup.deleteDocsFromSavedDfIndex(dfRoot,
+          corpus.take(1).toDF("doc_id", "text"), "doc_id", "text", n = 7,
+          eraseId = 0L)
+      }
+      assert(eraseErr.getMessage.contains("built with n=5"))
+      // the PROBE validates too, BEFORE the wrong report lands on disk
+      val outRoot = tmp + "/out"
+      val probeErr = intercept[IllegalArgumentException] {
+        graft.streaming.CorpusStreams.docNoveltyBatch(
+          batch.toDF("doc_id", "text"), 1L, dfRoot, outRoot, n = 7)
+      }
+      assert(probeErr.getMessage.contains("built with n=5"))
+      assert(!new java.io.File(outRoot).exists(),
+        "a mismatched-n probe must not land an all-novel partition")
+      // a legacy data-bearing root with NO marker refuses instead of
+      // pinning the caller's unverified n over existing counts (this
+      // check runs before the bucket-layout one)
+      val legacyRoot = tmp + "/legacy"
+      spark.read.parquet(dfRoot).write.parquet(legacyRoot)
+      val legacyErr = intercept[IllegalArgumentException] {
+        Dedup.updateSavedDfIndex(legacyRoot, batch.toDF("doc_id", "text"),
+          "doc_id", "text", n = 5, batchId = 1L)
+      }
+      assert(legacyErr.getMessage.contains("predates the gram-size marker"))
+      // the pinned marker itself is immutable
+      val path = new org.apache.hadoop.fs.Path(dfRoot)
+      val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+      val overwriteErr = intercept[IllegalArgumentException] {
+        SuffixDedup.writeMarkerAtomic(fs, path, "_graft_gram_n", "9")
+      }
+      assert(overwriteErr.getMessage.contains("immutable"))
+    } finally spark.sql(
+      s"DROP TABLE IF EXISTS ${Dedup.dfIndexTableName(dfRoot)}")
   }
 
-  test("propagateDocDelete wires the df-index leg; path form (buckets = 0) agrees with the bucketed form") {
+  test("propagateDocDelete wires the df-index leg: a re-ingested copy of the deleted doc is novel again") {
     val tmp = java.nio.file.Files
-      .createTempDirectory("graft_df_path").toString
+      .createTempDirectory("graft_df_erase_wiring").toString
     val (fpRoot, gramRoot, dfRoot) =
       (tmp + "/fp", tmp + "/grams", tmp + "/dfidx")
-    // PATH-form state throughout (the legacy knob)
-    Dedup.updateSavedDfIndex(dfRoot, corpus.toDF("doc_id", "text"),
-      "doc_id", "text", n = 5, batchId = 0L, buckets = 0)
-    graft.ext.SuffixDedup.updateSavedGramIndex(gramRoot,
-      corpus.toDF("doc_id", "text"), "text", 5, batchId = 0L)
-    graft.streaming.CorpusStreams.curateBatch(
-      corpus.toDF("doc_id", "text"), 0L, fpRoot, tmp + "/grams2",
-      tmp + "/out", minWords = 3, minTokens = 5, minKeepTokens = 1,
-      indexBuckets = 0)
-    val deleted = corpus.filter(_._1 == 1L)
-    val survivors = corpus.filter(_._1 != 1L)
-    graft.streaming.CorpusStreams.propagateDocDelete(
-      deleted.toDF("doc_id", "text"), fpRoot, gramRoot, minTokens = 5,
-      survivors = Some(survivors.toDF("doc_id", "text")),
-      gramBuckets = 0, fpBuckets = 0,
-      dfErase = Some((dfRoot, 7L)), dfN = 5, dfBuckets = 0)
-    val reBatch = Seq((20L, deleted.head._2))
-    val inc = collect(Dedup.gramNoveltyIncremental(
-      reBatch.toDF("doc_id", "text"),
-      Dedup.savedDfIndex(spark, dfRoot), "doc_id", "text", n = 5,
-      batchId = 1L))
-    assert(inc == collect(novelty(survivors ++ reBatch)
-      .filter(col("doc_id") >= 20L)), s"path-form erase diverged: $inc")
+    try {
+      Dedup.updateSavedDfIndex(dfRoot, corpus.toDF("doc_id", "text"),
+        "doc_id", "text", n = 5, batchId = 0L)
+      graft.streaming.CorpusStreams.curateBatch(
+        corpus.toDF("doc_id", "text"), 0L, fpRoot, gramRoot,
+        tmp + "/out", minWords = 3, minTokens = 5, minKeepTokens = 1)
+      val deleted = corpus.filter(_._1 == 1L)
+      val survivors = corpus.filter(_._1 != 1L)
+      graft.streaming.CorpusStreams.propagateDocDelete(
+        deleted.toDF("doc_id", "text"), fpRoot, gramRoot, minTokens = 5,
+        survivors = Some(survivors.toDF("doc_id", "text")),
+        dfErase = Some((dfRoot, 7L)), dfN = 5)
+      val reBatch = Seq((20L, deleted.head._2))
+      val inc = collect(Dedup.gramNoveltyIncremental(
+        reBatch.toDF("doc_id", "text"),
+        Dedup.savedDfIndexBucketed(spark, dfRoot), "doc_id", "text", n = 5,
+        batchId = 1L))
+      assert(inc == collect(novelty(survivors ++ reBatch)
+        .filter(col("doc_id") >= 20L)), s"df-leg erase diverged: $inc")
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS ${Dedup.dfIndexTableName(dfRoot)}")
+      Seq(fpRoot, gramRoot).foreach { r =>
+        spark.sql(
+          s"DROP TABLE IF EXISTS ${SuffixDedup.gramIndexTableName(r)}")
+      }
+    }
   }
 }

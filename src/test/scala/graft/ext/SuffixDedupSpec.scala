@@ -244,26 +244,7 @@ class SuffixDedupSpec extends SparkSpec {
     assert(ungated != expected, "fixture must make the gate observable")
   }
 
-  test("updateSavedGramIndex: first_batch_id is first appearance; replay appends nothing") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_gram_idx").toString + "/index"
-    val b0 = Seq((1L, "one two three four five six")).toDF("doc_id", "text")
-    val b1 = Seq((2L, "two three four five six seven")).toDF("doc_id", "text")
-    SuffixDedup.updateSavedGramIndex(root, b0, "text", 5, batchId = 0L)
-    SuffixDedup.updateSavedGramIndex(root, b1, "text", 5, batchId = 1L)
-    val idx = spark.read.parquet(root)
-      .as[(String, Long)].collect().toMap
-    assert(idx("one two three four five") == 0L)
-    assert(idx("two three four five six") == 0L,
-      "a gram both batches contain keeps its FIRST batch id")
-    assert(idx("three four five six seven") == 1L)
-    SuffixDedup.updateSavedGramIndex(root, b1, "text", 5, batchId = 1L)
-    val replayed = spark.read.parquet(root)
-      .as[(String, Long)].collect().toMap
-    assert(replayed == idx, "a replayed batch must append nothing")
-  }
-
-  test("bucketed gram index: same contents and screen output as the path form; replay appends nothing") {
+  test("bucketed gram index: first_batch_id is first appearance; screen ≡ the in-memory index; replay appends nothing") {
     val root = java.nio.file.Files
       .createTempDirectory("graft_gram_bkt").toString + "/index"
     try {
@@ -275,6 +256,7 @@ class SuffixDedupSpec extends SparkSpec {
         batchId = 1L, buckets = 4)
       val idx = SuffixDedup.savedGramIndexBucketed(spark, root, 4)
         .as[(String, Long)].collect().toMap
+      // a gram both batches contain keeps its FIRST batch id
       assert(idx == Map(
         "one two three four five" -> 0L,
         "two three four five six" -> 0L,
@@ -335,49 +317,53 @@ class SuffixDedupSpec extends SparkSpec {
     }
     val sharedGram = "shared run one two three"
     assert((gramsOf(textA) intersect gramsOf(textB)) == Set(sharedGram))
+    // every call below uses the default bucket count: a root written
+    // with default arguments must erase with default arguments
     def build(root: String): Unit =
-      SuffixDedup.updateSavedGramIndex(root,
+      SuffixDedup.updateSavedGramIndexBucketed(root,
         Seq((1L, textA), (2L, textB)).toDF("doc_id", "text"),
         "text", 5, batchId = 0L)
     def keySet(root: String): Set[String] =
-      spark.read.parquet(root).select("g").as[String].collect().toSet
+      SuffixDedup.savedGramIndexBucketed(spark, root)
+        .select("g").as[String].collect().toSet
+    val (r1, r2, r3) =
+      (tmp + "/exact", tmp + "/conservative", tmp + "/crash")
+    try {
+      // EXACT form: delete B's grams, keeping those the survivor A
+      // still carries → key set ≡ a from-scratch index over A alone
+      build(r1)
+      SuffixDedup.deleteKeysFromSavedIndex(spark, r1,
+        Seq(Tuple1(gramsOf(textB).toSeq)).toDF("gs")
+          .select(explode(col("gs")).as("g")),
+        keep = Some(Seq(Tuple1(gramsOf(textA).toSeq)).toDF("gs")
+          .select(explode(col("gs")).as("g"))))
+      assert(keySet(r1) == gramsOf(textA),
+        s"exact erasure must equal the survivor-only build: ${keySet(r1)}")
 
-    // EXACT form: delete B's grams, keeping those the survivor A
-    // still carries → key set ≡ a from-scratch index over A alone
-    val r1 = tmp + "/exact"
-    build(r1)
-    SuffixDedup.deleteKeysFromSavedIndex(spark, r1,
-      Seq(Tuple1(gramsOf(textB).toSeq)).toDF("gs")
-        .select(explode(col("gs")).as("g")),
-      keep = Some(Seq(Tuple1(gramsOf(textA).toSeq)).toDF("gs")
-        .select(explode(col("gs")).as("g"))))
-    assert(keySet(r1) == gramsOf(textA),
-      s"exact erasure must equal the survivor-only build: ${keySet(r1)}")
+      // CONSERVATIVE form: no survivors passed → the shared gram drops
+      // too (compliance-safe over-delete)
+      build(r2)
+      SuffixDedup.deleteKeysFromSavedIndex(spark, r2,
+        Seq(Tuple1(gramsOf(textB).toSeq)).toDF("gs")
+          .select(explode(col("gs")).as("g")))
+      assert(keySet(r2) == gramsOf(textA) -- Set(sharedGram),
+        s"conservative erasure drops shared keys: ${keySet(r2)}")
 
-    // CONSERVATIVE form: no survivors passed → the shared gram drops
-    // too (compliance-safe over-delete)
-    val r2 = tmp + "/conservative"
-    build(r2)
-    SuffixDedup.deleteKeysFromSavedIndex(spark, r2,
-      Seq(Tuple1(gramsOf(textB).toSeq)).toDF("gs")
-        .select(explode(col("gs")).as("g")))
-    assert(keySet(r2) == gramsOf(textA) -- Set(sharedGram),
-      s"conservative erasure drops shared keys: ${keySet(r2)}")
-
-    // mid-swap crash: root moved aside, replacement never landed —
-    // the next updater must RESTORE the prior state, not read empty
-    val r3 = tmp + "/crash"
-    build(r3)
-    val before = keySet(r3)
-    val p = new org.apache.hadoop.fs.Path(r3)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val aside = new org.apache.hadoop.fs.Path(p.getParent, "." + p.getName + ".swap_old")
-    assert(fs.rename(p, aside))
-    SuffixDedup.updateSavedGramIndex(r3,
-      Seq((9L, "freshly ingested doc words here now")).toDF("doc_id", "text"),
-      "text", 5, batchId = 1L)
-    assert(keySet(r3).intersect(before) == before,
-      "pre-crash state must survive the heal")
+      // mid-swap crash: root moved aside, replacement never landed —
+      // the next updater must RESTORE the prior state, not read empty
+      build(r3)
+      val before = keySet(r3)
+      val p = new org.apache.hadoop.fs.Path(r3)
+      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+      assert(fs.rename(p, graft.Swap.aside(p)))
+      SuffixDedup.updateSavedGramIndexBucketed(r3,
+        Seq((9L, "freshly ingested doc words here now")).toDF("doc_id", "text"),
+        "text", 5, batchId = 1L)
+      assert(keySet(r3).intersect(before) == before,
+        "pre-crash state must survive the heal")
+    } finally Seq(r1, r2, r3).foreach { r =>
+      spark.sql(s"DROP TABLE IF EXISTS ${SuffixDedup.gramIndexTableName(r)}")
+    }
   }
 
   test("bucketed index erasure: only bucket files holding deleted keys rewrite; others stay byte-identical") {

@@ -876,23 +876,33 @@ class StreamingSpec extends SparkSpec {
     graft.streaming.CorpusStreams.benchScreenBatch(
       batch2.toDF("doc_id", "text"), 1L, idxRoot, outRoot, minTokens = 5)
     assert(readOut() == got, "replay must be exact")
-    // the legacy PATH-parquet form (indexBuckets = 0) screens
-    // identically — and the bucketed reader REFUSES a path-form root
-    // instead of silently missing every probe
+    // a root left in the removed path-parquet form (plain part files
+    // of (g, first_batch_id) rows) is refused, not silently adopted as
+    // an index every probe misses, and the message says how to rebuild
     val pathRoot = tmp + "/benchidx_path"
-    graft.ext.SuffixDedup.updateSavedGramIndex(pathRoot, bench, "text", 5,
-      batchId = 0L)
-    graft.streaming.CorpusStreams.benchScreenBatch(
-      batch1.toDF("doc_id", "text"), 0L, pathRoot, tmp + "/out_path",
-      minTokens = 5, indexBuckets = 0)
-    val viaPath = spark.read.parquet(tmp + "/out_path")
-      .select(col("batch_id").cast("long"), col("doc_id"),
-        col("span_start"), col("span_end"), col("span_tokens"))
-      .as[(Long, Long, Int, Int, Int)].collect().toSet
-    assert(viaPath == suffixOf(batch1, 0L), s"path form diverged: $viaPath")
+    graft.ext.SuffixDedup.gramIndex(bench, "text", 5).write.parquet(pathRoot)
     val refuse = intercept[IllegalArgumentException] {
-      graft.ext.SuffixDedup.savedGramIndexBucketed(spark, pathRoot, 4)
+      graft.ext.SuffixDedup.savedGramIndexBucketed(spark, pathRoot)
     }
-    assert(refuse.getMessage.contains("path-form"), refuse.getMessage)
+    assert(refuse.getMessage.contains("path-form") &&
+      refuse.getMessage.contains("Rebuild"), refuse.getMessage)
+    // the rebuild the message names: append the old rows into the table
+    // registered at a new root; the screen then reads it like any index
+    val rebuilt = tmp + "/benchidx_rebuilt"
+    try {
+      graft.ext.SuffixDedup.savedGramIndexBucketed(spark, rebuilt)
+      spark.read.parquet(pathRoot).write.mode("append")
+        .insertInto(graft.ext.SuffixDedup.gramIndexTableName(rebuilt))
+      graft.streaming.CorpusStreams.benchScreenBatch(
+        batch1.toDF("doc_id", "text"), 0L, rebuilt, tmp + "/out_rebuilt",
+        minTokens = 5)
+      val viaRebuilt = spark.read.parquet(tmp + "/out_rebuilt")
+        .select(col("batch_id").cast("long"), col("doc_id"),
+          col("span_start"), col("span_end"), col("span_tokens"))
+        .as[(Long, Long, Int, Int, Int)].collect().toSet
+      assert(viaRebuilt == suffixOf(batch1, 0L),
+        s"rebuilt index diverged: $viaRebuilt")
+    } finally spark.sql("DROP TABLE IF EXISTS " +
+      graft.ext.SuffixDedup.gramIndexTableName(rebuilt))
   }
 }
