@@ -15,9 +15,6 @@ object GraftSession {
     *
     *  - UTC session time zone — all reference timestamps are UTC ISO
     *    strings; date-part extraction must not depend on host TZ.
-    *  - dynamic partition overwrite — layer writes replace exactly the
-    *    partitions present in the frame (the reference's per-key
-    *    `replace=True`), never the whole root.
     *  - parquet nanos-as-long — the driver testdata carries
     *    TIMESTAMP(NANOS) which microsecond `TimestampType` can't hold;
     *    [[Tables.events]] converts explicitly.
@@ -33,7 +30,6 @@ object GraftSession {
     b.config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** Single-JVM session sized to `cores` threads, shuffle partitions

@@ -4,11 +4,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** THE crash-safe replacement of one live directory: every saved-state
   * root ([[graft.ext.SketchState.swapInState]] and what is built on it),
-  * every lake leaf that [[graft.fred.io.LakeIO.compactFragmented]]
-  * or [[graft.fred.io.LakeIO.deleteWhere]] rewrites, and every leaf that
-  * [[graft.fred.Pipeline.propagateDelete]] erases commits here. The
-  * reference overwrites in place (`load_bytes(replace=True)`), which
-  * deletes the only copy before the new one lands.
+  * every lake leaf [[graft.fred.io.LakeIO]]'s one commit writes (layer
+  * writes, per-batch stream outputs, `compactFragmented`, `deleteWhere`)
+  * and every leaf [[graft.fred.Pipeline.propagateDelete]] erases commits
+  * here. The reference overwrites in place (`load_bytes(replace=True)`),
+  * which deletes the only copy before the new one lands.
   *
   * [[swap]]: the caller stages the complete new copy at a dot-prefixed
   * `staged` path (invisible to readers). The live copy renames to its

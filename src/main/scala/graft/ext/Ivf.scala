@@ -74,7 +74,8 @@ object Ivf {
   def save(index: Index, root: String): Unit = {
     val spark = index.assigned.sparkSession
     import spark.implicits._
-    index.assigned.write.mode("overwrite")
+    index.assigned.write.mode("overwrite") // static: the whole index, never stale clusters
+      .option("partitionOverwriteMode", "static")
       .partitionBy("cluster").parquet(s"$root/assigned")
     index.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
       .toSeq.toDF("cluster", "centroid")

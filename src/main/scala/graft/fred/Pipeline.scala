@@ -12,9 +12,9 @@ import graft.fred.ops.{Clean, Derive, MonthlyAgg, YearlyGold}
   * `extract >> transform >> aggregate >> load`
   * (`dags/fred_historical_backfill.py:172`) as a plain Scala driver.
   *
-  * Each stage is idempotent (dynamic partition overwrite / keyed
-  * upsert), so re-running any window is safe — the property the
-  * reference gets from Airflow `catchup` + overwrite semantics.
+  * Each stage is idempotent (per-leaf `Swap` commit of the partitions
+  * written / keyed upsert), so re-running any window is safe — the
+  * property the reference gets from Airflow `catchup` + overwrite.
   * Indicators never interact until the serving sink, so a real
   * deployment runs [[runIndicator]] for all indicators concurrently;
   * within one indicator the layers are sequential by data dependency.
@@ -59,8 +59,8 @@ class Pipeline(spark: SparkSession, source: FredSource, lakeRoot: String,
     * (B1-B3, C1-C2), then ONE partitioned JSON-lines write of the whole
     * window (H1). The frame is kept in one partition, so each month leaf
     * holds exactly one file, like the reference's per-month S3 object
-    * (`extract_fred_data.py:238-290`), and dynamic overwrite replaces
-    * exactly the window's months. Every month is fetched before
+    * (`extract_fred_data.py:238-290`), and the write replaces exactly
+    * the window's months. Every month is fetched before
     * anything is written: a call writes all of its months or none, and
     * all of them carry the same `ingested_at` stamp. */
   def extract(seriesId: String, start: LocalDate, end: LocalDate): Unit =
@@ -115,8 +115,8 @@ class Pipeline(spark: SparkSession, source: FredSource, lakeRoot: String,
     *
     *   - bronze + silver: the silver month is a pure function of the
     *     bronze month, so erasure at the source grain IS a leaf drop
-    *     at both layers. Dynamic partition overwrite cannot express
-    *     this (an empty re-derivation overwrites nothing — the stale
+    *     at both layers. A partition-replacing write cannot express
+    *     this (an empty re-derivation replaces nothing — the stale
     *     month would survive), which is exactly why deletion is a
     *     first-class verb here and not a re-run of [[transform]].
     *   - gold: the (indicator, year) partition re-aggregates from the

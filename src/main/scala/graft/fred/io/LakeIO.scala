@@ -1,6 +1,8 @@
 package graft.fred.io
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.types.StructType
 
 /** Partitioned-lake read/write (G2, G3, H1, H2).
@@ -8,26 +10,21 @@ import org.apache.spark.sql.types.StructType
   * The reference hand-builds Hive-style paths
   * (`raw_data/indicator=…/year=…/month=…`, `extract_fred_data.py:216-219`)
   * and overwrites one file per partition (`load_bytes(replace=True)`,
-  * `:225`). The Spark-native equivalent: write the partitioned ROOT with
-  * dynamic partition overwrite — only the partitions present in the
-  * frame are replaced, exactly the reference's per-key `replace=True`
-  * semantics — and read the root with filters, letting Catalyst's
-  * `PruneFileSourcePartitions` skip everything else. No string-built
-  * paths anywhere; at 100 TB the pruning + parquet row-group stats do
-  * the work the reference's path arithmetic did.
+  * `:225`). The Spark-native equivalent: write the partitioned ROOT
+  * through one [[graft.Swap]] commit per leaf ([[commit]]) — exactly
+  * the partitions present in the frame are replaced, the reference's
+  * per-key `replace=True` — and read the root with filters, letting
+  * Catalyst's `PruneFileSourcePartitions` skip everything else. No
+  * string-built paths anywhere; at 100 TB the pruning + parquet
+  * row-group stats do the work the reference's path arithmetic did.
   */
 object LakeIO {
 
   val PartitionCols: Seq[String] = Seq("indicator", "observation_year", "observation_month")
 
-  private def dynamicOverwrite(spark: SparkSession): Unit =
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-  /** H1: bronze JSON-lines write, partition-overwriting (`extract_fred_data.py:213-226`). */
-  def writeBronze(df: DataFrame, root: String): Unit = {
-    dynamicOverwrite(df.sparkSession)
-    df.write.mode(SaveMode.Overwrite).partitionBy(PartitionCols: _*).json(root)
-  }
+  /** H1: bronze JSON-lines write, partition-replacing (`extract_fred_data.py:213-226`). */
+  def writeBronze(df: DataFrame, root: String): Unit =
+    commit(df, root, PartitionCols, "json")
 
   /** G2: bronze read with explicit schema — never infer
     * (`transform_fred_data.py:83` re-infers per file; SURVEY §7.4.4). */
@@ -41,13 +38,11 @@ object LakeIO {
     spark.read.schema(StructType(dataFields)).json(root)
   }
 
-  /** H2: silver/gold parquet write, partition-overwriting
+  /** H2: silver/gold parquet write, partition-replacing
     * (`transform_fred_data.py:150-175`, `aggregate_fred_data.py:64-86`). */
   def writeParquet(df: DataFrame, root: String,
-      partitionCols: Seq[String] = PartitionCols): Unit = {
-    dynamicOverwrite(df.sparkSession)
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(root)
-  }
+      partitionCols: Seq[String] = PartitionCols): Unit =
+    commit(df, root, partitionCols, "parquet")
 
   /** G3: partitioned parquet read; missing partitions simply yield no
     * rows (the reference swallows per-file NoSuchKey into empty frames,
@@ -63,7 +58,7 @@ object LakeIO {
     schemaIfMissing match {
       case None => spark.read.parquet(root)
       case Some(s) =>
-        val path = new org.apache.hadoop.fs.Path(root)
+        val path = new Path(root)
         val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
         if (!fs.exists(path))
           spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
@@ -86,15 +81,12 @@ object LakeIO {
       .as[graft.fred.SilverObservation]
   }
 
-  /** ORC write, partition-overwriting — same dynamic-overwrite contract
-    * as [[writeParquet]] for deployments standardized on ORC (both are
-    * columnar with predicate-pushdown stats; the operators above are
-    * format-agnostic). */
+  /** ORC write, partition-replacing — same commit as [[writeParquet]]
+    * for deployments standardized on ORC (both are columnar with
+    * predicate-pushdown stats; the operators above are format-agnostic). */
   def writeOrc(df: DataFrame, root: String,
-      partitionCols: Seq[String] = PartitionCols): Unit = {
-    dynamicOverwrite(df.sparkSession)
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).orc(root)
-  }
+      partitionCols: Seq[String] = PartitionCols): Unit =
+    commit(df, root, partitionCols, "orc")
 
   def readOrc(spark: SparkSession, root: String): DataFrame =
     spark.read.orc(root)
@@ -134,7 +126,7 @@ object LakeIO {
   /** Parquet file census under a root: (n_data_files, total_bytes).
     * Metadata/_SUCCESS files don't count. */
   def parquetCensus(spark: SparkSession, root: String): (Long, Long) = {
-    val path = new org.apache.hadoop.fs.Path(root)
+    val path = new Path(root)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     val it = fs.listFiles(path, true)
     var n = 0L; var bytes = 0L
@@ -174,7 +166,7 @@ object LakeIO {
     val rows = df.count()
     val avgRow = math.max(1L, bytes / math.max(rows, 1L))
     val maxRecords = math.max(1L, targetBytes / avgRow)
-    df.repartition(partitionCols.map(org.apache.spark.sql.functions.col): _*)
+    df.repartition(partitionCols.map(col): _*)
       .write.mode(SaveMode.Overwrite)
       .option("maxRecordsPerFile", maxRecords)
       .partitionBy(partitionCols: _*)
@@ -186,10 +178,10 @@ object LakeIO {
     * ≥1 data file), with their data-file counts. */
   def partitionCensus(spark: SparkSession,
       root: String): Seq[(String, Long)] = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    def walk(dir: org.apache.hadoop.fs.Path): Unit = {
+    def walk(dir: Path): Unit = {
       val entries = fs.listStatus(dir)
       val n = entries.count(e =>
         e.isFile && e.getPath.getName.endsWith(".parquet"))
@@ -207,12 +199,11 @@ object LakeIO {
     * [[compactParquet]] a large lake actually schedules (rewriting
     * 100 TB to fix last week's fragmented partitions is absurd; the
     * maintenance job touches the hot tail only). Fragmented leaves
-    * are read with `basePath` (partition columns preserved), written
-    * compacted to a dot-prefixed temp dir under `root` (invisible to
-    * readers — Spark skips dot-dirs), then swapped in one leaf at a
-    * time by [[graft.Swap.swap]]; [[healPartitionSwaps]], wired into
-    * the top of this op and [[deleteWhere]], finishes a swap a crash
-    * interrupted. Untouched partitions keep their exact files.
+    * are read with `basePath` (partition columns preserved) and
+    * rewritten compacted through [[commit]], one leaf swap each;
+    * [[healPartitionSwaps]], wired into the top of this op and
+    * [[deleteWhere]], finishes a swap a crash interrupted. Untouched
+    * partitions keep their exact files.
     *
     * Returns (partitions_compacted, files_before, files_after) over
     * the whole root. */
@@ -222,37 +213,27 @@ object LakeIO {
     require(targetBytes > 0, "targetBytes must be positive")
     require(minFiles >= 1, "minFiles must be >= 1")
     healPartitionSwaps(spark, root) // finish a crashed prior swap first
-    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val leaves = partitionCensus(spark, root)
     val filesBefore = leaves.map(_._2).sum
     val frag = leaves.filter(_._2 > minFiles)
     if (frag.isEmpty) return (0L, filesBefore, filesBefore)
-    val tmp = new org.apache.hadoop.fs.Path(rootPath, ".compact_tmp")
-    fs.delete(tmp, true)
     val df = spark.read.option("basePath", root)
       .parquet(frag.map(_._1): _*)
     val rows = df.count()
     val fragBytes = frag.map { case (dir, _) =>
       parquetCensus(spark, dir)._2 }.sum
     val avgRow = math.max(1L, fragBytes / math.max(rows, 1L))
-    df.repartition(partitionCols.map(org.apache.spark.sql.functions.col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", math.max(1L, targetBytes / avgRow))
-      .partitionBy(partitionCols: _*)
-      .parquet(tmp.toString)
-    val qRoot = fs.makeQualified(rootPath).toString
-    frag.foreach { case (dir, _) =>
-      val leaf = fs.makeQualified(new org.apache.hadoop.fs.Path(dir))
-      val rel = leaf.toString.stripPrefix(qRoot).stripPrefix("/")
-      require(rel.nonEmpty && rel != leaf.toString,
-        s"partition $leaf is not under $qRoot")
-      val tmpLeaf = new org.apache.hadoop.fs.Path(tmp, rel)
-      require(fs.exists(tmpLeaf),
-        s"compacted output missing for partition $rel — aborting swap")
-      graft.Swap.swap(fs, leaf, tmpLeaf)
-    }
-    fs.delete(tmp, true)
+    commit(df.repartition(partitionCols.map(col): _*), root, partitionCols, "parquet",
+      Map("maxRecordsPerFile" -> math.max(1L, targetBytes / avgRow).toString),
+      swapLeaves = staged => {
+        // an unstaged fragmented leaf would keep its rows twice: abort first
+        val missing = frag.map(_._1).toSet --
+          staged.map(rel => fs.makeQualified(new Path(rootPath, rel)).toString)
+        require(missing.isEmpty, s"compacted output missing for ${missing.mkString(", ")}")
+        staged
+      })
     (frag.size.toLong, filesBefore, partitionCensus(spark, root).map(_._2).sum)
   }
 
@@ -269,10 +250,9 @@ object LakeIO {
     * Mechanics: one predicate scan finds the affected partition
     * tuples (parquet min/max stats prune files the predicate cannot
     * match even inside unpruned partitions); only those leaves are
-    * re-read, anti-filtered, written to a dot-prefixed temp dir
-    * (invisible to readers) and swapped in per partition by
-    * [[graft.Swap.swap]] — a partition whose rows ALL matched has no
-    * staged leaf, so its live leaf is removed outright.
+    * re-read, anti-filtered and rewritten through [[commit]], one leaf
+    * swap each — a partition whose rows ALL matched has no staged
+    * leaf, so its swap removes the live leaf outright.
     * Non-affected partitions are never read past the probe scan.
     *
     * @return (partitions_rewritten, rows_deleted) */
@@ -280,39 +260,68 @@ object LakeIO {
       predicate: org.apache.spark.sql.Column,
       partitionCols: Seq[String] = PartitionCols): (Long, Long) = {
     healPartitionSwaps(spark, root) // finish a crashed prior swap first
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val probe = spark.read.parquet(root).filter(predicate)
-      .groupBy(partitionCols.map(org.apache.spark.sql.functions.col): _*)
+      .groupBy(partitionCols.map(col): _*)
       .count()
       .collect() // bounded by the partition count, not the row count
     if (probe.isEmpty) return (0L, 0L)
     val rowsDeleted = probe.map(_.getLong(partitionCols.size)).sum
-    val qRoot = fs.makeQualified(rootPath).toString
-    val leaves = probe.map { r =>
+    val leaves = probe.toSeq.map { r =>
       leafPath(partitionCols.zipWithIndex.map { case (c, i) => c -> r.get(i) })
     }
-    val tmp = new org.apache.hadoop.fs.Path(rootPath, ".delete_tmp")
-    fs.delete(tmp, true)
     // NOT coalesce(p, false), not plain !p: a NULL-valued predicate
     // row is NOT a match (the probe's filter(p) semantics) and must
     // SURVIVE the rewrite — `!p` on NULL is NULL and would silently
     // drop it
     val kept = spark.read.option("basePath", root)
-      .parquet(leaves.map(l => s"$qRoot/$l").toIndexedSeq: _*)
-      .filter(!org.apache.spark.sql.functions.coalesce(predicate,
-        org.apache.spark.sql.functions.lit(false)))
-    kept.repartition(partitionCols.map(org.apache.spark.sql.functions.col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*)
-      .parquet(tmp.toString)
-    leaves.foreach { rel =>
-      graft.Swap.swap(fs, new org.apache.hadoop.fs.Path(s"$qRoot/$rel"),
-        new org.apache.hadoop.fs.Path(tmp, rel))
-    }
-    fs.delete(tmp, true)
+      .parquet(leaves.map(l => s"$root/$l"): _*)
+      .filter(!coalesce(predicate, lit(false)))
+    commit(kept.repartition(partitionCols.map(col): _*), root, partitionCols,
+      "parquet", swapLeaves = _ => leaves)
     (leaves.length.toLong, rowsDeleted)
   }
+
+  /** THE commit of every partition-replacing lake write: `rows` is
+    * written once, partitioned, into a fresh dot-prefixed stage under
+    * `root` (hidden; unique per call, as [[graft.fred.Pipeline]] may run
+    * indicators concurrently on one root; a plain write, so no
+    * partition-overwrite mode is read or set). Each leaf `swapLeaves`
+    * picks from the staged ones (writers take all; it runs before any
+    * swap) replaces its live leaf by [[graft.Swap.swap]], which heals
+    * the leaf first and erases it if nothing was staged: driver work is
+    * O(written leaves), never a walk of the root. The stage goes on
+    * success and failure (a killed process leaves it hidden, unread);
+    * the root exists afterwards, for [[readParquet]]'s no-files case. */
+  private def commit(rows: DataFrame, root: String, partitionCols: Seq[String],
+      format: String, options: Map[String, String] = Map.empty,
+      swapLeaves: Seq[String] => Seq[String] = identity): Unit = {
+    require(partitionCols.nonEmpty, "a lake write replaces partitions: name at least one")
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(rows.sparkSession.sessionState.newHadoopConf())
+    val stage = new Path(rootPath, s".stage-${java.util.UUID.randomUUID()}")
+    try {
+      rows.write.options(options).partitionBy(partitionCols: _*)
+        .format(format).save(stage.toString)
+      swapLeaves(stagedLeaves(fs, stage, partitionCols.size).map(_.mkString("/")))
+        .foreach { rel =>
+          val live = new Path(rootPath, rel)
+          fs.mkdirs(live.getParent) // a rename into a missing parent is not atomic
+          graft.Swap.swap(fs, live, new Path(stage, rel))
+        }
+      fs.mkdirs(rootPath)
+    } catch { case e: Throwable => // keep the write's error, not the cleanup's
+      try fs.delete(stage, true) catch { case d: Throwable => e.addSuppressed(d) }
+      throw e
+    }
+    fs.delete(stage, true)
+    rows.sparkSession.catalog.refreshByPath(root) // cached reads of `root` see the swap
+  }
+
+  /** The `col=value` names of each leaf `depth` levels below `dir`. */
+  private def stagedLeaves(fs: FileSystem, dir: Path, depth: Int): Seq[List[String]] =
+    if (depth == 0) Seq(Nil)
+    else fs.listStatus(dir).toSeq.filter(s => s.isDirectory && s.getPath.getName.contains("="))
+      .flatMap(s => stagedLeaves(fs, s.getPath, depth - 1).map(s.getPath.getName :: _))
 
   /** Hive-style leaf path of one partition tuple, escaped exactly as
     * Spark's partitioned writer escapes it (`A:B` → `indicator=A%3AB`,
@@ -324,27 +333,27 @@ object LakeIO {
         .getPartitionPathString(c, Option(v).map(_.toString).orNull)
     }.mkString("/")
 
-  /** Heal the partition swaps a crashed [[compactFragmented]] or
-    * [[deleteWhere]] left behind — wired into the top of both ops (the
+  /** Heal the partition swaps a crashed [[commit]] left behind — wired
+    * into the top of [[compactFragmented]] and [[deleteWhere]] (the
     * maintenance-cadence choke point; plain lake roots have no reader
-    * funnel to intercept, so run this after a crash before trusting
-    * reads). Walks the partition tree and runs [[graft.Swap.heal]] on
+    * funnel to intercept: after a crash, run this or re-run the write
+    * before trusting reads). Walks the tree, running [[graft.Swap.heal]] on
     * every leaf that has a swap sibling. A restored leaf is logged: it
     * is a rewrite a crash undid, which re-running the op redoes.
     *
     * @return (leaves_restored, stale_asides_purged) */
   def healPartitionSwaps(spark: SparkSession, root: String): (Long, Long) = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(rootPath)) return (0L, 0L)
     var restored = 0L
     var purged = 0L
-    def walk(dir: org.apache.hadoop.fs.Path): Unit =
+    def walk(dir: Path): Unit =
       fs.listStatus(dir).filter(_.isDirectory).foreach { e =>
         val n = e.getPath.getName
         graft.Swap.liveName(n) match {
           case Some(orig) =>
-            val leaf = new org.apache.hadoop.fs.Path(dir, orig)
+            val leaf = new Path(dir, orig)
             graft.Swap.heal(fs, leaf) match {
               case graft.Swap.Restored =>
                 System.err.println(s"[graft] healPartitionSwaps: restored " +

@@ -497,19 +497,13 @@ object CorpusStreams {
       batchId, indexBuckets)
   }
 
-  /** Idempotent per-batch output write: the batch's rows land under
-    * `outRoot/batch_id=<id>` with dynamic partition overwrite scoped
-    * to THIS WRITE via the DataFrameWriter option — never by toggling
-    * the session-wide conf, which two concurrent foreachBatch streams
-    * on one SparkSession could interleave (one batch overwriting in
-    * static mode wipes the other stream's partitions, or the restore
-    * clobbers the other stream's setting — r15 ADVICE #3). */
+  /** Idempotent per-batch output write: the batch's rows replace
+    * `outRoot/batch_id=<id>` through [[graft.fred.io.LakeIO.writeParquet]]'s
+    * leaf commit; a replay swaps in the same partition, no other. */
   private def writeBatchPartition(rows: DataFrame, batchId: Long,
       outRoot: String): Unit =
-    rows.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(outRoot)
+    graft.fred.io.LakeIO.writeParquet(rows.withColumn("batch_id", lit(batchId)),
+      outRoot, Seq("batch_id"))
 
   /** GDPR / right-to-erasure across the CURATION state (r15 VERDICT
     * #5 — the [[graft.fred.Pipeline.propagateDelete]] posture for the

@@ -53,12 +53,12 @@ object StreamingSilver {
   }
 
   /** Incremental silver writer: every micro-batch upserts its updated
-    * monthly rows into the silver parquet lake by dynamic partition
-    * overwrite — the streaming twin of the reference's per-month
+    * monthly rows into the silver parquet lake by partition replacement
+    * ([[graft.fred.io.LakeIO.writeParquet]]) — the streaming twin of the reference's per-month
     * `replace=True` write (`transform_fred_data.py:150-175`).
     *
     * Update output mode ⇒ each batch carries only groups that changed;
-    * dynamic overwrite replaces exactly those (indicator, year, month)
+    * the write replaces exactly those (indicator, year, month)
     * partitions. Idempotent under replay, checkpoint-resumable.
     */
   def writeSilverIncremental(silver: DataFrame, root: String,

@@ -88,6 +88,24 @@ class IvfSpec extends SparkSpec {
       "argmin over literal centroids must equal ml transform")
   }
 
+  test("save replaces the whole index, also in a dynamic-overwrite session") {
+    import org.apache.spark.sql.functions.col
+    val s = spark.newSession()
+    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    val corpus = graft.Tables.embeddings(s, sf)
+    val root = java.nio.file.Files.createTempDirectory("graft-ivf-resave").toString
+    Ivf.save(Ivf.build(corpus, "vec_id", "embedding", nClusters = 8), root)
+    val four = Ivf.build(corpus, "vec_id", "embedding", nClusters = 4)
+    Ivf.save(four, root)
+    val loaded = Ivf.load(s, root)
+    assert(loaded.centroids.length == 4)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("neighbor_id"), col("cluster").cast("int")).collect().map(_.toString).sorted.toSeq
+    val got = rows(loaded.assigned)
+    assert(got.size == corpus.count(), s"${got.size} assigned rows for ${corpus.count()} vectors")
+    assert(got == rows(four.assigned), "the 8-cluster index's rows survived the re-save")
+  }
+
   test("streamed appendToSaved ingest: lake layout equals the all-at-once index") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -263,7 +263,7 @@ class FredOpsSpec extends SparkSpec {
       .withColumn("observation_date", lit("2024-02-02"))
     graft.fred.io.LakeIO.writeParquet(jan, tmp)
     graft.fred.io.LakeIO.writeParquet(feb, tmp)
-    // jan survives feb's overwrite (dynamic mode: only feb's partition replaced)
+    // jan survives feb's write (only feb's partition is replaced)
     val all = graft.fred.io.LakeIO.readParquet(spark, tmp)
     assert(all.count() == 2)
     // re-writing jan with a new value replaces jan in place
@@ -276,6 +276,32 @@ class FredOpsSpec extends SparkSpec {
     // partition pruning: month filter reads one directory
     val pruned = after.filter(col("observation_month") === 2)
     assert(pruned.count() == 1)
+  }
+
+  test("LakeIO writes leave the session's partitionOverwriteMode unset") {
+    // the shared test session is static; a write that set the conf would
+    // flip every later spec's writers to dynamic
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val s = spark.newSession()
+    assert(!s.conf.getAll.contains(key))
+    val tmp = java.nio.file.Files.createTempDirectory("graft-lake-conf").toString
+    graft.fred.io.LakeIO.writeParquet(s.range(2).selectExpr("'DGS10' AS indicator",
+      "2024 AS observation_year", "CAST(id + 1 AS INT) AS observation_month", "id AS value"), tmp)
+    assert(!s.conf.getAll.contains(key), s"a lake write set $key to ${s.conf.getOption(key)}")
+    assert(s.read.parquet(tmp).count() == 2)
+  }
+
+  test("LakeIO writes refresh a cached read of their root") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-lake-cache").toString
+    def month(m: Int) = Seq(("DGS10", 2024, m, "v")).toDF("indicator",
+      "observation_year", "observation_month", "value")
+    graft.fred.io.LakeIO.writeParquet(month(1), tmp)
+    val cached = spark.read.parquet(tmp).cache()
+    try {
+      assert(cached.count() == 1)
+      graft.fred.io.LakeIO.writeParquet(month(2), tmp)
+      assert(cached.count() == 2, "the cached read still lists the root as it was")
+    } finally cached.unpersist()
   }
 
   test("LakeIO ORC round-trip: dynamic partition overwrite, same contract as parquet") {

@@ -439,8 +439,22 @@ class PipelineSpec extends SparkSpec {
     assert(gold3 == Set("UNRATE"), s"got $gold3")
   }
 
-  test("propagateDelete: a crash at any delete of a leaf erase leaves the month whole or gone") {
+  /** A copy of the lake at `template`, in a fresh temp directory. */
+  private def copyLake(template: String): String = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
+    import scala.jdk.CollectionConverters._
+    val to = Files.createTempDirectory("graft-lake-copy")
+    val walk = Files.walk(Paths.get(template))
+    try walk.iterator().asScala.foreach { p =>
+      val q = to.resolve(Paths.get(template).relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(q)
+      else Files.copy(p, q, StandardCopyOption.REPLACE_EXISTING)
+    } finally walk.close()
+    to.toString
+  }
+
+  test("propagateDelete: a crash at any delete of a leaf erase leaves the month whole or gone") {
+    import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     import graft.FaultFs
     val template = Files.createTempDirectory("graft-erase-template").toString
@@ -454,16 +468,6 @@ class PipelineSpec extends SparkSpec {
     files.foreach(Files.delete)
     lines.zipWithIndex.foreach { case (l, i) => Files.writeString(leaf.resolve(s"part-$i.json"), l) }
     assert(lines.size == 3)
-    def copyOfTemplate(): String = {
-      val to = Files.createTempDirectory("graft-erase")
-      val walk = Files.walk(Paths.get(template))
-      try walk.iterator().asScala.foreach { p =>
-        val q = to.resolve(Paths.get(template).relativize(p).toString)
-        if (Files.isDirectory(p)) Files.createDirectories(q)
-        else Files.copy(p, q, StandardCopyOption.REPLACE_EXISTING)
-      } finally walk.close()
-      to.toString
-    }
     def month1Rows(root: String): Long = LakeIO.readBronze(spark, s"$root/raw_data")
       .where(col("observation_month") === 1).count()
 
@@ -472,7 +476,7 @@ class PipelineSpec extends SparkSpec {
     try {
       /** The lake root after `propagateDelete` of month 1 met `fault`. */
       def eraseWith(fault: String => FaultFs.Fault): (FaultFs.Fault, String) = {
-        val root = copyOfTemplate()
+        val root = copyLake(template)
         val f = fault(new org.apache.hadoop.fs.Path(
           s"$root/raw_data/indicator=DGS10/observation_year=2024").toUri.getPath)
         FaultFs.installed = f
@@ -504,6 +508,95 @@ class PipelineSpec extends SparkSpec {
       spark.conf.unset("fs.file.impl")
       spark.conf.unset("fs.file.impl.disable.cache")
     }
+  }
+
+  /** Crashes `write` at each create, mkdirs, rename and delete under
+    * `layer` of a copy of the lake at `template`, one point per copy.
+    * After `healPartitionSwaps` the layer must read exactly its rows
+    * before or after the write (never short, never unreadable), and a
+    * re-run of the write must read after with no swap aside left.
+    * Returns which of the two each crash point read. */
+  private def lakeWriteCrashMatrix(template: String, layer: String,
+      write: Pipeline => Unit): Set[String] = {
+    import graft.FaultFs
+    import scala.jdk.CollectionConverters._
+    // every column but the run's own stamps, which differ per run
+    def rows(root: String): Seq[String] = spark.read.parquet(s"$root/$layer")
+      .select("indicator", "observation_year", "observation_month", "value",
+        "observation_count").collect().map(_.toString).sorted.toSeq
+    def dotDirs(root: String): Seq[String] = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$root/$layer"))
+      try walk.iterator().asScala.filter(java.nio.file.Files.isDirectory(_))
+        .map(_.getFileName.toString).filter(_.startsWith(".")).toSeq
+      finally walk.close()
+    }
+    def pipe(root: String) = new Pipeline(spark, new FredSource.Fixture(window), root, retries = 0)
+    val before = rows(template)
+    spark.conf.set("fs.file.impl", classOf[FaultFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    try {
+      /** A copy of the template after `write` met `fault`. */
+      def writeWith(fault: String => FaultFs.Fault): (FaultFs.Fault, String) = {
+        val root = copyLake(template)
+        val f = fault(new org.apache.hadoop.fs.Path(s"$root/$layer").toUri.getPath)
+        FaultFs.installed = f
+        try write(pipe(root))
+        catch { case _: Exception if f.tripped => () }
+        finally FaultFs.installed = FaultFs.census("/")
+        (f, root)
+      }
+      val (clean, cleanRoot) = writeWith(FaultFs.census(_))
+      val after = rows(cleanRoot)
+      assert(after != before, "the write must change the layer")
+      assert(dotDirs(cleanRoot).isEmpty, s"a clean write left ${dotDirs(cleanRoot)}")
+      val n = clean.count
+      (1 to n).map { k =>
+        val (f, root) = writeWith(new FaultFs.Fault(FaultFs.Verbs, _, k, crash = true))
+        assert(f.tripped, s"mutation #$k of $n never ran")
+        LakeIO.healPartitionSwaps(spark, s"$root/$layer")
+        val got = rows(root)
+        assert(got == before || got == after,
+          s"crash at mutation #$k of $n read $got; before $before, after $after")
+        write(pipe(root))
+        assert(rows(root) == after, s"re-run after crash #$k of $n")
+        assert(!dotDirs(root).exists(_.contains(".swap_")), s"crash #$k left ${dotDirs(root)}")
+        if (got == before) "before" else "after"
+      }.toSet
+    } finally {
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
+    }
+  }
+
+  test("lake writes: a crash at any mutation of aggregate's gold rewrite leaves the partition whole") {
+    val template = java.nio.file.Files.createTempDirectory("graft-gold-template").toString
+    val pipe = new Pipeline(spark, new FredSource.Fixture(window), template)
+    pipe.extract("DGS10", LocalDate.parse("2024-01-01"), LocalDate.parse("2024-03-31"))
+    pipe.transform("DGS10", Seq(2024))
+    // the live DGS10 2024 gold partition: other values, in two files
+    val stale = graft.fred.ops.YearlyGold.toGold(spark.read.parquet(pipe.silverRoot))
+      .withColumn("value", col("value") + 100)
+    Seq(col("observation_month") === 1, col("observation_month") =!= 1).foreach { m =>
+      stale.where(m).coalesce(1).write.mode("append")
+        .partitionBy("indicator", "observation_year").parquet(pipe.goldRoot)
+    }
+    assert(LakeIO.partitionCensus(spark, pipe.goldRoot).map(_._2) == Seq(2L))
+    val seen = lakeWriteCrashMatrix(template, "aggregated_data",
+      _.aggregate("DGS10", Seq(2024)))
+    assert(seen == Set("before", "after"), s"crash points must fall on both sides: $seen")
+  }
+
+  test("lake writes: a crash at any mutation of a month's first write, its year new, leaves it whole or absent") {
+    val template = java.nio.file.Files.createTempDirectory("graft-silver-template").toString
+    val pipe = new Pipeline(spark, new FredSource.Fixture(window + (("DGS10", 2025, 1) ->
+      """{"observations":[{"date":"2025-01-02","value":"4.9"}]}""")), template)
+    pipe.extract("DGS10", LocalDate.parse("2024-01-01"), LocalDate.parse("2024-03-31"))
+    pipe.extract("DGS10", LocalDate.parse("2025-01-01"), LocalDate.parse("2025-01-31"))
+    pipe.transform("DGS10", Seq(2024))
+    assert(!new java.io.File(s"${pipe.silverRoot}/indicator=DGS10/observation_year=2025").exists())
+    val seen = lakeWriteCrashMatrix(template, "processed_data",
+      _.transform("DGS10", Seq(2025)))
+    assert(seen == Set("before", "after"), s"crash points must fall on both sides: $seen")
   }
 
   test("jdbcCreateTableSql: reference-shaped serving DDL") {
