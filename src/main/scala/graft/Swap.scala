@@ -4,11 +4,13 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** THE crash-safe replacement of one live directory: every saved-state
   * root ([[graft.ext.SketchState.swapInState]] and what is built on it),
-  * every lake leaf [[graft.fred.io.LakeIO]]'s one commit writes (layer
-  * writes, per-batch stream outputs, `compactFragmented`, `deleteWhere`)
-  * and every leaf [[graft.fred.Pipeline.propagateDelete]] erases commits
-  * here. The reference overwrites in place (`load_bytes(replace=True)`),
-  * which deletes the only copy before the new one lands.
+  * every lake leaf [[graft.fred.io.LakeIO]]'s one commit writes or erases
+  * (layer writes, per-batch stream outputs, `compactFragmented`, and
+  * `replaceLeaves`, which `deleteWhere` and the gold step of
+  * [[graft.fred.Pipeline.propagateDelete]] call) and every bronze and
+  * silver leaf `propagateDelete` drops commits here. The reference
+  * overwrites in place (`load_bytes(replace=True)`), which deletes the
+  * only copy before the new one lands.
   *
   * [[swap]]: the caller stages the complete new copy at a dot-prefixed
   * `staged` path (invisible to readers). The live copy renames to its

@@ -74,11 +74,26 @@ class Pipeline(spark: SparkSession, source: FredSource, lakeRoot: String,
 
   /** Transform bronze months of one indicator to silver monthly grain:
     * read the partitioned root with pruning filters (no path
-    * arithmetic), clean (B4-B5, C3), group-agg (A1), write (H2). */
+    * arithmetic), clean (B4-B5, C3), group-agg (A1), write (H2).
+    *
+    * One Spark job, one task: the pruned read is coalesced to one
+    * partition (a `coalesce`, not a `repartition`, which would be an
+    * exchange), and a single-partition child already satisfies the
+    * aggregate's clustering on the group keys, so no exchange is
+    * planned and AQE has no map stage to run as a job of its own.
+    * Sound at any lake size because the group keys are the bronze leaf
+    * keys and one call reads one series' window: FRED's densest series
+    * is daily, about 366 rows a year. A scan of many series at once
+    * (an all-indicator window) needs its own plan and must not copy
+    * this. Each silver leaf is still written by one task, so it is one
+    * file; and since extract writes one file per bronze leaf, each
+    * group's sum runs in file order as under the exchange plan, so
+    * `value` is bit-identical to it. */
   def transform(seriesId: String, years: Seq[Int]): Unit = withRetry("transform") {
     val bronze = LakeIO.readBronze(spark, bronzeRoot)
       .where(col("indicator") === seriesId &&
         col("observation_year").isin(years: _*))
+      .coalesce(1)
     val cleaned = Clean.cleanValues(bronze)
       .withColumn("observation_year", col("observation_year").cast("int"))
       .withColumn("observation_month", col("observation_month").cast("int"))
@@ -115,13 +130,16 @@ class Pipeline(spark: SparkSession, source: FredSource, lakeRoot: String,
     *
     *   - bronze + silver: the silver month is a pure function of the
     *     bronze month, so erasure at the source grain IS a leaf drop
-    *     at both layers. A partition-replacing write cannot express
-    *     this (an empty re-derivation replaces nothing — the stale
-    *     month would survive), which is exactly why deletion is a
-    *     first-class verb here and not a re-run of [[transform]].
-    *   - gold: the (indicator, year) partition re-aggregates from the
-    *     SURVIVING silver months — one pruned scan of that year only —
-    *     or drops outright when the deleted month was the year's last.
+    *     at both layers, with no Spark job. A partition-replacing write
+    *     cannot express this (an empty re-derivation replaces nothing —
+    *     the stale month would survive), which is exactly why deletion
+    *     is a first-class verb here and not a re-run of [[transform]].
+    *   - gold: the (indicator, year) leaf is replaced by
+    *     [[graft.fred.io.LakeIO.replaceLeaves]] with the gold of the
+    *     SURVIVING silver months — one pruned scan of that year only,
+    *     in one Spark job. When the deleted month was the year's last,
+    *     nothing is staged and the same commit erases the leaf; no
+    *     probe of the year runs first.
     *
     * Every other partition is untouched (spec-pinned byte-identical):
     * at 100 TB the delete job reads one year of one indicator, never
@@ -166,11 +184,8 @@ class Pipeline(spark: SparkSession, source: FredSource, lakeRoot: String,
         .readParquet(spark, silverRoot, Some(Schemas.silver))
         .where(col("indicator") === seriesId &&
           col("observation_year") === year)
-      if (silverYear.isEmpty)
-        drop(goldRoot, yearLeaf)
-      else
-        LakeIO.writeParquet(YearlyGold.toGold(silverYear), goldRoot,
-          Seq("indicator", "observation_year"))
+      LakeIO.replaceLeaves(YearlyGold.toGold(silverYear), goldRoot, Seq(yearLeaf),
+        Seq("indicator", "observation_year"))
     }
 
   /** The full reference DAG for one indicator over a date window. */

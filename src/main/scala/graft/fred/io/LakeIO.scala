@@ -1,9 +1,14 @@
 package graft.fred.io
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.types.StructType
+
+import scala.jdk.CollectionConverters._
 
 /** Partitioned-lake read/write (G2, G3, H1, H2).
   *
@@ -177,15 +182,20 @@ object LakeIO {
   /** Leaf partition directories under `root` (dirs directly holding
     * ≥1 data file), with their data-file counts. */
   def partitionCensus(spark: SparkSession,
-      root: String): Seq[(String, Long)] = {
+      root: String): Seq[(String, Long)] =
+    leafFiles(spark, root).map { case (dir, files) => (dir.toString, files.size.toLong) }
+
+  /** Each leaf directory under `root` with its parquet data files. */
+  private def leafFiles(spark: SparkSession,
+      root: String): Seq[(Path, Seq[FileStatus])] = {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Path, Seq[FileStatus])]
     def walk(dir: Path): Unit = {
       val entries = fs.listStatus(dir)
-      val n = entries.count(e =>
-        e.isFile && e.getPath.getName.endsWith(".parquet"))
-      if (n > 0) out += ((dir.toString, n.toLong))
+      val files = entries.filter(e =>
+        e.isFile && e.getPath.getName.endsWith(".parquet")).toSeq
+      if (files.nonEmpty) out += ((dir, files))
       entries.filter(_.isDirectory)
         .filterNot(_.getPath.getName.startsWith("."))
         .foreach(e => walk(e.getPath))
@@ -205,6 +215,13 @@ object LakeIO {
     * [[deleteWhere]], finishes a swap a crash interrupted. Untouched
     * partitions keep their exact files.
     *
+    * Two Spark jobs: the shuffle and the write. Everything else is
+    * read on the driver from the fragmented files' Parquet footers:
+    * the row count (Σ row-group rows) that sizes `maxRecordsPerFile`,
+    * and the read schema, which is the first file's footer schema, as
+    * Spark's own inference would read it. That is O(fragmented files),
+    * below the whole-root walk this op already does.
+    *
     * Returns (partitions_compacted, files_before, files_after) over
     * the whole root. */
   def compactFragmented(spark: SparkSession, root: String,
@@ -214,22 +231,29 @@ object LakeIO {
     require(minFiles >= 1, "minFiles must be >= 1")
     healPartitionSwaps(spark, root) // finish a crashed prior swap first
     val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val leaves = partitionCensus(spark, root)
-    val filesBefore = leaves.map(_._2).sum
-    val frag = leaves.filter(_._2 > minFiles)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = rootPath.getFileSystem(conf)
+    val leaves = leafFiles(spark, root)
+    val filesBefore = leaves.map(_._2.size.toLong).sum
+    val frag = leaves.filter(_._2.size > minFiles)
     if (frag.isEmpty) return (0L, filesBefore, filesBefore)
-    val df = spark.read.option("basePath", root)
-      .parquet(frag.map(_._1): _*)
-    val rows = df.count()
-    val fragBytes = frag.map { case (dir, _) =>
-      parquetCensus(spark, dir)._2 }.sum
-    val avgRow = math.max(1L, fragBytes / math.max(rows, 1L))
+    val files = frag.flatMap(_._2)
+    val footers = files.map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      try r.getFooter finally r.close()
+    }
+    val rows = footers.flatMap(_.getBlocks.asScala).map(_.getRowCount).sum
+    val schema = ParquetFileFormat.readSchemaFromFooter(
+      new Footer(files.head.getPath, footers.head),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    val df = spark.read.schema(schema).option("basePath", root)
+      .parquet(frag.map(_._1.toString): _*)
+    val avgRow = math.max(1L, files.map(_.getLen).sum / math.max(rows, 1L))
     commit(df.repartition(partitionCols.map(col): _*), root, partitionCols, "parquet",
       Map("maxRecordsPerFile" -> math.max(1L, targetBytes / avgRow).toString),
       swapLeaves = staged => {
         // an unstaged fragmented leaf would keep its rows twice: abort first
-        val missing = frag.map(_._1).toSet --
+        val missing = frag.map(_._1.toString).toSet --
           staged.map(rel => fs.makeQualified(new Path(rootPath, rel)).toString)
         require(missing.isEmpty, s"compacted output missing for ${missing.mkString(", ")}")
         staged
@@ -250,9 +274,10 @@ object LakeIO {
     * Mechanics: one predicate scan finds the affected partition
     * tuples (parquet min/max stats prune files the predicate cannot
     * match even inside unpruned partitions); only those leaves are
-    * re-read, anti-filtered and rewritten through [[commit]], one leaf
-    * swap each — a partition whose rows ALL matched has no staged
-    * leaf, so its swap removes the live leaf outright.
+    * re-read, with the root read's schema (no second inference, and
+    * the partition columns keep the whole root's types),
+    * anti-filtered and rewritten by [[replaceLeaves]] — a partition
+    * whose rows ALL matched stages nothing, so its live leaf is erased.
     * Non-affected partitions are never read past the probe scan.
     *
     * @return (partitions_rewritten, rows_deleted) */
@@ -260,7 +285,8 @@ object LakeIO {
       predicate: org.apache.spark.sql.Column,
       partitionCols: Seq[String] = PartitionCols): (Long, Long) = {
     healPartitionSwaps(spark, root) // finish a crashed prior swap first
-    val probe = spark.read.parquet(root).filter(predicate)
+    val all = spark.read.parquet(root)
+    val probe = all.filter(predicate)
       .groupBy(partitionCols.map(col): _*)
       .count()
       .collect() // bounded by the partition count, not the row count
@@ -273,25 +299,41 @@ object LakeIO {
     // row is NOT a match (the probe's filter(p) semantics) and must
     // SURVIVE the rewrite — `!p` on NULL is NULL and would silently
     // drop it
-    val kept = spark.read.option("basePath", root)
+    val kept = spark.read.schema(all.schema).option("basePath", root)
       .parquet(leaves.map(l => s"$root/$l"): _*)
       .filter(!coalesce(predicate, lit(false)))
-    commit(kept.repartition(partitionCols.map(col): _*), root, partitionCols,
-      "parquet", swapLeaves = _ => leaves)
+    replaceLeaves(kept.repartition(partitionCols.map(col): _*), root, leaves, partitionCols)
     (leaves.length.toLong, rowsDeleted)
   }
+
+  /** Replace exactly the named `leaves` of a parquet `root` (relative
+    * paths, as [[leafPath]] builds them) with what `rows` holds for
+    * them, through one write and one [[commit]]: a named leaf with rows
+    * is swapped in; a named leaf with no rows is erased by its swap.
+    * Every row must fall in a named leaf — a stray one would replace a
+    * leaf the caller did not name, so the commit aborts before any
+    * swap. The erase needs no probe of `rows` first: an empty frame
+    * stages nothing and every named leaf goes. */
+  def replaceLeaves(rows: DataFrame, root: String, leaves: Seq[String],
+      partitionCols: Seq[String] = PartitionCols): Unit =
+    commit(rows, root, partitionCols, "parquet", swapLeaves = staged => {
+      val stray = staged.toSet -- leaves
+      require(stray.isEmpty, s"rows outside the named leaves: ${stray.mkString(", ")}")
+      leaves
+    })
 
   /** THE commit of every partition-replacing lake write: `rows` is
     * written once, partitioned, into a fresh dot-prefixed stage under
     * `root` (hidden; unique per call, as [[graft.fred.Pipeline]] may run
     * indicators concurrently on one root; a plain write, so no
     * partition-overwrite mode is read or set). Each leaf `swapLeaves`
-    * picks from the staged ones (writers take all; it runs before any
-    * swap) replaces its live leaf by [[graft.Swap.swap]], which heals
-    * the leaf first and erases it if nothing was staged: driver work is
-    * O(written leaves), never a walk of the root. The stage goes on
-    * success and failure (a killed process leaves it hidden, unread);
-    * the root exists afterwards, for [[readParquet]]'s no-files case. */
+    * names, given the staged ones (writers take all, [[replaceLeaves]]
+    * its named leaves; it runs before any swap), replaces its live leaf
+    * by [[graft.Swap.swap]], which heals the leaf first and erases it if
+    * nothing was staged: driver work is O(named leaves), never a walk
+    * of the root. The stage goes on success and failure (a killed
+    * process leaves it hidden, unread); the root exists afterwards, for
+    * [[readParquet]]'s no-files case. */
   private def commit(rows: DataFrame, root: String, partitionCols: Seq[String],
       format: String, options: Map[String, String] = Map.empty,
       swapLeaves: Seq[String] => Seq[String] = identity): Unit = {

@@ -66,6 +66,30 @@ class DeleteWhereSpec extends SparkSpec {
       "non-matching rows of the affected partitions survive")
   }
 
+  test("job budget: deleteWhere runs five Spark jobs: one schema inference, not two") {
+    val root = freshLake()
+    var result = (0L, 0L)
+    val jobs = sparkJobs {
+      result = LakeIO.deleteWhere(spark, root,
+        col("indicator") === "A" && col("user") === "u1", parts)
+    }
+    assert(result == ((2L, 8L)))
+    assert(jobs == 5, s"deleteWhere ran $jobs Spark jobs")
+  }
+
+  test("replaceLeaves: a row outside the named leaves aborts before any swap") {
+    val root = freshLake()
+    val before = census(root)
+    val named = LakeIO.leafPath(Seq("indicator" -> "A", "observation_year" -> 2023))
+    val rows = spark.read.parquet(root).where(col("indicator") === "A")
+    val e = intercept[IllegalArgumentException] {
+      LakeIO.replaceLeaves(rows, root, Seq(named), parts)
+    }
+    assert(e.getMessage.contains("observation_year=2024"), e.getMessage)
+    assert(census(root) == before, "no leaf may change")
+    assert(!new java.io.File(root).list().exists(_.startsWith(".")), "the stage must go")
+  }
+
   test("a fully-matching partition's leaf is removed outright") {
     val root = freshLake()
     val (nPart, nRows) = LakeIO.deleteWhere(spark, root,

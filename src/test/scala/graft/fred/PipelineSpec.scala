@@ -6,6 +6,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.fred.io.{DdlOps, FredSource, LakeIO}
+import graft.fred.ops.{Clean, MonthlyAgg}
 
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -143,27 +144,6 @@ class PipelineSpec extends SparkSpec {
     assert(!new java.io.File(s"$tmp/raw_data").exists(), "month 1 must not have been written")
   }
 
-  /** The Spark jobs `body` starts, counted through a job group. */
-  private def sparkJobs(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"job-count-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "job count")
-      try body finally sc.clearJobGroup()
-      // the listener bus is asynchronous: drain it before counting, so a
-      // late second job cannot go unseen
-      org.apache.spark.GraftListenerFlush.flush(sc)
-      jobs.get
-    } finally sc.removeSparkListener(l)
-  }
-
   test("extract: a whole window costs exactly one Spark job") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-extract-jobs").toString
     val pipe = new Pipeline(spark, new FredSource.Fixture(window), tmp)
@@ -171,6 +151,44 @@ class PipelineSpec extends SparkSpec {
       pipe.extract("DGS10", LocalDate.parse("2024-01-01"), LocalDate.parse("2024-03-31"))
     }
     assert(jobs == 1, s"extract ran $jobs Spark jobs")
+  }
+
+  test("transform: silver is bit-identical to the exchange plan's, one file per leaf") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-transform-plan").toString
+    // three months of a daily series, with sentinels and unparsable values
+    val rnd = new scala.util.Random(7)
+    val daily = (1 to 3).map { m =>
+      val obs = (1 to 28).map { d =>
+        val v = rnd.nextInt(10) match {
+          case 0 => "."
+          case 1 => "n/a"
+          case _ => "%.4f".formatLocal(java.util.Locale.ROOT, 3 + rnd.nextDouble())
+        }
+        s"""{"date":"2024-0$m-${"%02d".format(d)}","value":"$v"}"""
+      }
+      ("DGS10", 2024, m) -> obs.mkString("""{"observations":[""", ",", "]}")
+    }.toMap
+    val pipe = new Pipeline(spark, new FredSource.Fixture(daily), tmp)
+    pipe.extract("DGS10", LocalDate.parse("2024-01-01"), LocalDate.parse("2024-03-31"))
+    pipe.transform("DGS10", Seq(2024))
+    val viaExchange = MonthlyAgg.toSilver(Clean.cleanValues(
+      LakeIO.readBronze(spark, pipe.bronzeRoot)
+        .where(col("indicator") === "DGS10" && col("observation_year") === 2024)
+        .withColumn("observation_year", col("observation_year").cast("int"))
+        .withColumn("observation_month", col("observation_month").cast("int"))))
+    assert(viaExchange.queryExecution.executedPlan.toString.contains("Exchange"),
+      "the reference plan must shuffle")
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("indicator"), col("observation_year"), col("observation_month"),
+        col("value"), col("observation_count"), col("ingested_at"))
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(3)), r.getLong(4), r.getString(5)))
+      .sortBy(_._3).toSeq
+    val expected = rows(viaExchange)
+    assert(expected.map(_._3) == Seq(1, 2, 3))
+    assert(rows(spark.read.parquet(pipe.silverRoot)) == expected)
+    assert(LakeIO.partitionCensus(spark, pipe.silverRoot).map(_._2) == Seq(1L, 1L, 1L),
+      "one file per silver leaf")
   }
 
   test("typed silver boundary: Dataset[SilverObservation] round-trips the lake") {
@@ -597,6 +615,99 @@ class PipelineSpec extends SparkSpec {
     val seen = lakeWriteCrashMatrix(template, "processed_data",
       _.transform("DGS10", Seq(2025)))
     assert(seen == Set("before", "after"), s"crash points must fall on both sides: $seen")
+  }
+
+  test("lake writes: a crash at any mutation of a gold erase, the year's last month deleted, leaves the year whole or gone") {
+    val template = java.nio.file.Files.createTempDirectory("graft-erase-gold-template").toString
+    val pipe = new Pipeline(spark, new FredSource.Fixture(window + (("DGS10", 2025, 1) ->
+      """{"observations":[{"date":"2025-01-02","value":"4.9"}]}""")), template)
+    pipe.extract("DGS10", LocalDate.parse("2024-01-01"), LocalDate.parse("2024-01-31"))
+    pipe.extract("DGS10", LocalDate.parse("2025-01-01"), LocalDate.parse("2025-01-31"))
+    pipe.transform("DGS10", Seq(2024, 2025))
+    // the 2025 partition keeps gold readable once 2024 is erased
+    pipe.aggregate("DGS10", Seq(2024, 2025))
+    assert(LakeIO.partitionCensus(spark, pipe.goldRoot).size == 2)
+    val seen = lakeWriteCrashMatrix(template, "aggregated_data",
+      _.propagateDelete("DGS10", 2024, 1))
+    assert(seen == Set("before", "after"), s"crash points must fall on both sides: $seen")
+  }
+
+  // ---------------------------------------- job budgets: one job per layer call
+
+  /** A lake holding DGS10's January–March 2024 through gold. */
+  private def budgetLake(): Pipeline = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-budget").toString
+    val pipe = new Pipeline(spark, new FredSource.Fixture(window), tmp)
+    pipe.runIndicator("DGS10", LocalDate.parse("2024-01-01"), LocalDate.parse("2024-03-31"))(_ => ())
+    pipe
+  }
+
+  test("job budget: transform of a year runs one Spark job") {
+    val pipe = budgetLake()
+    assert(sparkJobs(pipe.transform("DGS10", Seq(2024))) == 1)
+  }
+
+  test("job budget: aggregate of a year runs one Spark job") {
+    val pipe = budgetLake()
+    assert(sparkJobs(pipe.aggregate("DGS10", Seq(2024))) == 1)
+  }
+
+  test("job budget: load into an UpsertSink.write sink runs one Spark job") {
+    val pipe = budgetLake()
+    val url = "jdbc:derby:memory:graftbudget;create=true"
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      try conn.createStatement().execute("DROP TABLE gold_budget") catch { case _: Exception => () }
+      // Derby reserves INDICATOR and VALUE, hence the renamed columns
+      conn.createStatement().execute("CREATE TABLE gold_budget (series_id VARCHAR(16), " +
+        "observation_year INT, observation_month INT, value_d DOUBLE, " +
+        "observation_count BIGINT, ingested_at VARCHAR(40), processed_at VARCHAR(40), " +
+        "aggregated_at VARCHAR(40))")
+    } finally conn.close()
+    val jobs = sparkJobs {
+      pipe.load("DGS10", Seq(2024)) { gold =>
+        graft.fred.io.UpsertSink.write(gold.withColumnRenamed("indicator", "series_id")
+          .withColumnRenamed("value", "value_d"), url, "gold_budget",
+          keys = Seq("series_id", "observation_year", "observation_month"),
+          sqlBuilder = graft.fred.io.UpsertSink.insertSql)
+      }
+    }
+    assert(jobs == 1, s"load ran $jobs Spark jobs")
+    val c = java.sql.DriverManager.getConnection(url)
+    try {
+      val rs = c.createStatement().executeQuery("SELECT COUNT(*) FROM gold_budget")
+      rs.next()
+      assert(rs.getLong(1) == 3L)
+    } finally c.close()
+  }
+
+  test("job budget: propagateDelete runs one Spark job, re-deriving gold or erasing its year") {
+    val pipe = budgetLake()
+    def goldMonths(): Set[Int] = spark.read.parquet(pipe.goldRoot)
+      .select("observation_month").as[Int].collect().toSet
+    assert(sparkJobs(pipe.propagateDelete("DGS10", 2024, 1)) == 1)
+    assert(goldMonths() == Set(2, 3))
+    assert(sparkJobs(pipe.propagateDelete("DGS10", 2024, 2)) == 1)
+    assert(goldMonths() == Set(3))
+    // the year's last month: nothing to re-derive, the gold leaf goes
+    assert(sparkJobs(pipe.propagateDelete("DGS10", 2024, 3)) == 1)
+    assert(LakeIO.partitionCensus(spark, pipe.goldRoot).isEmpty)
+  }
+
+  test("job budget: compactFragmented of a fragmented root runs two Spark jobs") {
+    val root = java.nio.file.Files.createTempDirectory("graft-budget-compact").toString
+    (0 until 2000).map(i => (s"IND${i % 2}", 2024, 1, i.toLong, s"v$i"))
+      .toDF("indicator", "observation_year", "observation_month", "seq", "payload")
+      .repartition(25).write.mode("append")
+      .partitionBy("indicator", "observation_year", "observation_month")
+      .parquet(root)
+    var result = (0L, 0L, 0L)
+    val jobs = sparkJobs {
+      result = LakeIO.compactFragmented(spark, root, targetBytes = 64L * 1024 * 1024, minFiles = 5)
+    }
+    assert(jobs == 2, s"compactFragmented ran $jobs Spark jobs")
+    assert(result._1 == 2L && result._3 == 2L, s"got $result")
+    assert(spark.read.parquet(root).count() == 2000L)
   }
 
   test("jdbcCreateTableSql: reference-shaped serving DDL") {
